@@ -302,23 +302,6 @@ def _group_counters(sc, group: str) -> dict[str, object]:
     return out
 
 
-def _drain_query_checkpoints() -> None:
-    """Release the per-query diamond-junction localCheckpoints after a
-    query's action completes (ADVICE r08: un-released checkpoint blocks
-    accumulate across a long bench/sweep session — the same storage
-    pressure the pagerank leak fix removed from the iterative loops).
-    Guarded: a tree without the tracked-checkpoint registry still
-    benches."""
-    try:
-        from dask_recommender_system_spark.models.common import (
-            release_query_checkpoints,
-        )
-
-        release_query_checkpoints()
-    except Exception:
-        pass
-
-
 def _planted_holdout_rmse(spark) -> dict[str, float]:
     """Held-out RMSE on the planted-factor fixture (the quantity
     tests/test_model_metrics.py gates) — reported next to the sf0.1 train
@@ -435,11 +418,9 @@ def main() -> None:
             assert n >= 0
             sc.setJobGroup("bench:hygiene", "cache/checkpoint hygiene")
             # queries that persist() intermediates must not bill the next
-            # run/query for their executor-memory footprint
+            # run/query for their executor-memory footprint (the registry
+            # releases their tracked checkpoints when the next one starts)
             spark.catalog.clearCache()
-            # ... and the per-query junction checkpoints must not pile up
-            # executor storage blocks across the 125-query session
-            _drain_query_checkpoints()
             if run_i == q_runs - 1:
                 counters[name] = _group_counters(sc, group)
         runs.sort()
@@ -471,7 +452,6 @@ def main() -> None:
             runs.append(time.perf_counter() - t0)
             sc.setJobGroup("bench:hygiene", "cache/checkpoint hygiene")
             spark.catalog.clearCache()
-            _drain_query_checkpoints()
             if run_i == n_runs - 1:
                 counters[f"{name}_noop"] = _group_counters(sc, group)
         runs.sort()
@@ -623,7 +603,8 @@ def main() -> None:
         json.dump(full, f, indent=1)
         f.write("\n")
     # LAST line: compact summary sized to survive the driver's ~2000-char
-    # tail capture — headline queries only, everything else in the file
+    # tail capture — headline queries only, everything else (BENCH_NOTES
+    # included) in the file
     summary = {
         "metric": "bench_total",
         "value": total,
@@ -643,7 +624,6 @@ def main() -> None:
             "CORRECTNESS_local.json CORRECTNESS_sf01.json "
             "CORRECTNESS_sf1.json CORRECTNESS_sf3.json"
         ),
-        "notes": BENCH_NOTES,
         **extras,
     }
     line = json.dumps(summary, separators=(",", ":"))

@@ -295,27 +295,32 @@ RELEASE_STATS: dict[str, int] = {"released": 0, "failed": 0}
 #: operator, because the caller has not run the plan yet; un-released
 #: they accumulate executor storage across a 125-query bench or a
 #: 422-query sweep, the same pressure the pagerank leak fix removed).
-#: Operators register them via tracked_checkpoint; harnesses (bench.py,
-#: tools/profile_queries.py, correctness sweeps) call
-#: release_query_checkpoints() AFTER each query's action completes.
+#: Operators register them via tracked_checkpoint / track_for_release;
+#: the registry's query wrapper (registry.query) releases the previous
+#: query's entries when the next registered query is called, so every
+#: entry point — the harnesses and __spark_entry__ alike —
+#: holds at most one query's worth.
 QUERY_CHECKPOINTS: list[DataFrame] = []
 
 
+def track_for_release(df: DataFrame) -> DataFrame:
+    """Register an already-checkpointed frame for release when the next
+    registered query starts; returns ``df``. ONLY for checkpoints that
+    feed the query's returned plan — a released local checkpoint cannot
+    be recomputed, so callers that re-run the same DataFrame must call
+    the query fn again (every harness here does)."""
+    QUERY_CHECKPOINTS.append(df)
+    return df
+
+
 def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) + register the result for harness-side
-    release once the consuming query's action has completed. ONLY for
-    checkpoints that feed the query's returned plan — a released local
-    checkpoint cannot be recomputed, so callers that re-run the same
-    DataFrame must call the query fn again (every harness here does)."""
-    out = df.localCheckpoint(eager=True)
-    QUERY_CHECKPOINTS.append(out)
-    return out
+    """localCheckpoint(eager) + ``track_for_release``."""
+    return track_for_release(df.localCheckpoint(eager=True))
 
 
 def release_query_checkpoints() -> int:
     """Free every tracked per-query checkpoint's storage blocks; returns
-    how many were released. Safe to call between queries in any harness;
-    a no-op when nothing was tracked."""
+    how many were released. A no-op when nothing was tracked."""
     n = 0
     while QUERY_CHECKPOINTS:
         release_checkpoint(QUERY_CHECKPOINTS.pop())

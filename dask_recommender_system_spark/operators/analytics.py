@@ -17,7 +17,8 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table
-from ..registry import REGISTRY, query
+from ..models.common import tracked_checkpoint
+from ..registry import query
 from .relational import ORACLE_EPOCH, _utc
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
@@ -326,7 +327,7 @@ def timeseries_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both the span branch and the calendar join consume daily; the
     # eager checkpoint (output-sized: |user|×|days| rows) keeps the
     # static plan from re-scanning the corpus per branch — same fix as
-    # data_drift_psi / chi2_independence; tracked for harness-side
+    # data_drift_psi / chi2_independence; tracked for registry-side
     # release (ADVICE r08)
     daily = tracked_checkpoint(daily)
     span = daily.groupBy("user_id").agg(
@@ -678,7 +679,7 @@ def join_point_in_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapse/close construction scd2_intervals pins (half-open
     [from, to) — every event lands in exactly one version)."""
     _utc(spark)
-    iv = REGISTRY["scd2_intervals"].fn(spark, sf_dir).select(
+    iv = scd2_intervals(spark, sf_dir).select(
         "user_id", "attr", "valid_from", "valid_to"
     )
     e = load_table(spark, sf_dir, "events").select(

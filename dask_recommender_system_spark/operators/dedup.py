@@ -786,7 +786,7 @@ def min_label_components(
         prev_sum = cur_sum
     release_checkpoint(edges)
     # the returned plan reads the FINAL labels checkpoint — tracked for
-    # harness-side release after the caller's action (ADVICE r08)
+    # registry-side release after the caller's action (ADVICE r08)
     track_for_release(labels)
     if not converged:
         # The fixpoint check already detects this for free: labels only
@@ -1167,7 +1167,6 @@ def dedup_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min id IS the lexicographic-min word, so decoding the final label
     reproduces the oracle's MIN(word) canonical exactly."""
     from ..models.common import encode_column
-    from ..registry import REGISTRY as _REG
 
     vocab = (
         load_table(spark, sf_dir, "part")
@@ -1176,7 +1175,7 @@ def dedup_fuzzy_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     enc = encode_column(vocab, "word", "wid").withColumnRenamed("value", "word")
     pairs = (
-        _REG["fuzzy_join_blocked"].fn(spark, sf_dir)
+        fuzzy_join_blocked(spark, sf_dir)
         .select("w1", "w2")
         .join(enc.select(F.col("word").alias("w1"), F.col("wid").alias("ida")), "w1")
         .join(enc.select(F.col("word").alias("w2"), F.col("wid").alias("idb")), "w2")
@@ -1274,7 +1273,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Checkpoint: rk is the junction of TWO diamonds (the bucket frame
     # self-joins, and cand feeds both the verify and the final join), so
     # un-pinned it replayed the rank window + parse 4x. |docs| rows of
-    # two BIGINTs — one tiny materialization, tracked for harness-side
+    # two BIGINTs — one tiny materialization, tracked for registry-side
     # release (ADVICE r08).
     rk = tracked_checkpoint(
         ranked.select(
@@ -1911,7 +1910,7 @@ def record_linkage_fs_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                ROW_NUMBER() OVER (ORDER BY
                    lower(substr(trim(text), 1, {SNM_KEY_LEN}))
-                       || '|' || lpad(CAST(doc_id AS VARCHAR), 8, '0'))
+                       || '|' || lpad(CAST(doc_id AS VARCHAR), 20, '0'))
                    AS rn
         FROM documents),
     cand AS (

@@ -112,7 +112,7 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past the threshold the join stays keyed against the u-partitioned
     # edge checkpoint
     rank_bytes = int(n) * 3 * 8
-    for _ in range(PR_ITERS):
+    for it in range(PR_ITERS):
         br = broadcast_if_fits(ranks, rank_bytes)
         new_ranks = (
             en.join(br, en["u"] == br["node"])
@@ -131,13 +131,14 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         # PR_ITERS checkpointed RDDs into the session and a long bench/
         # sweep session accumulates storage pressure (r08 profiling saw
         # late-session runs of this family 2-5x their early-session
-        # time). No-ops for the round-0 non-checkpointed seed frame.
-        release_checkpoint(ranks)
+        # time). The round-0 seed frame is not a checkpoint: skip it.
+        if it:
+            release_checkpoint(ranks)
         ranks = new_ranks
     out = ranks.select("node", F.round(F.col("r") * n, 6).alias("rank_rel"))
     # the returned plan reads only the FINAL ranks checkpoint — the edge
     # table's blocks are dead once the last round has materialized; the
-    # final checkpoint itself is registered for harness-side release
+    # final checkpoint itself is registered for registry-side release
     # after the caller's action completes (ADVICE r08)
     release_checkpoint(en)
     track_for_release(ranks)
@@ -217,7 +218,7 @@ def triangle_stats_from_edges(e: DataFrame) -> DataFrame:
     # 4x in the plan (r08 audit — the item_cf_similarity union lesson).
     # The edge set is (u, v) BIGINT pairs, far smaller than the fact
     # table; one materialization job replaces three replays. Tracked for
-    # harness-side release once the caller's action completes (ADVICE r08).
+    # registry-side release once the caller's action completes (ADVICE r08).
     e = tracked_checkpoint(e)
     deg = (
         e.select(F.col("u").alias("node"))
@@ -240,7 +241,7 @@ def triangle_stats_from_edges(e: DataFrame) -> DataFrame:
     )
     # same diamond: o feeds the two wedge legs AND the closing join —
     # checkpoint once instead of re-running the degree joins 3x; tracked
-    # for harness-side release (ADVICE r08)
+    # for registry-side release (ADVICE r08)
     o = tracked_checkpoint(o)
     e1 = o.select(
         F.col("src").alias("a"), F.col("dst").alias("b"), F.col("kdst").alias("kb")
@@ -324,10 +325,10 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         "node", F.lit(0).cast("long").alias("level")
     )
     # depth <= BFS_MAX_DEPTH bounds the checkpoint count; all of them are
-    # tracked for harness-side release after the caller's action (ADVICE
+    # tracked for release when the next query starts (ADVICE
     # r08 — only the FINAL levels checkpoint feeds the returned plan, the
     # rest are dead the moment the next union materializes)
-    levels = track_for_release(seed.localCheckpoint(eager=True))
+    levels = tracked_checkpoint(seed)
     frontier = levels.select("node")
     for d in range(1, BFS_MAX_DEPTH + 1):
         nxt = tracked_checkpoint(
@@ -504,7 +505,7 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         r = new_r
     out = r.select("node", F.round(F.col("r") * n, 6).alias("ppr_rel"))
     # only the final r checkpoint feeds the returned plan — tracked for
-    # harness-side release (ADVICE r08)
+    # registry-side release (ADVICE r08)
     release_checkpoint(en)
     release_checkpoint(nodes)
     release_checkpoint(sn)
@@ -600,7 +601,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     # and lets every round's join be broadcast-hinted while it fits
     # (guide §3.1 — see pagerank_items)
     label_bytes = labels.count() * 3 * 8
-    for _ in range(LPA_ROUNDS):
+    for it in range(LPA_ROUNDS):
         bl = broadcast_if_fits(labels, label_bytes)
         votes = (
             edges.join(bl, edges["u"] == bl["node"])
@@ -623,11 +624,12 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             .localCheckpoint(eager=True)
         )
         # release the superseded round (see pagerank_items)
-        release_checkpoint(labels)
+        if it:
+            release_checkpoint(labels)
         labels = new_labels
     sizes = labels.groupBy("lab").agg(F.count("*").alias("community_size"))
     # the returned plan reads only the final labels checkpoint — tracked
-    # for harness-side release (ADVICE r08)
+    # for registry-side release (ADVICE r08)
     release_checkpoint(edges)
     track_for_release(labels)
     return (

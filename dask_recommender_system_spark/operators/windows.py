@@ -930,9 +930,7 @@ def recommendation_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Reuses the X5 query (and composes its ORACLE verbatim, so both
     engines audit the same lists); adds one item-keyed popularity agg, a
     1-row percentile-cut broadcast, and a single reduce."""
-    from ..registry import REGISTRY as _REG
-
-    recs = _REG["recommend_top_k"].fn(spark, sf_dir)
+    recs = recommend_top_k(spark, sf_dir)
     r = _ratings_view(spark, sf_dir)
     pop = r.groupBy("item_id").agg(F.count("*").alias("cnt"))
     cut = pop.agg(
@@ -2254,9 +2252,7 @@ def recs_intra_list_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     (25 brands vs 6 types — finer attributes diversify more). Plan:
     recs (bounded user sample × k) join a broadcast part dim, three
     bounded keyed aggs — free next to the recs query itself."""
-    from ..registry import REGISTRY as _REG
-
-    recs = _REG["recommend_top_k"].fn(spark, sf_dir)
+    recs = recommend_top_k(spark, sf_dir)
     p = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("item_id"), "p_brand", "p_type"
     )

@@ -19,6 +19,7 @@ so session-timezone settings cannot skew the comparison.
 
 from __future__ import annotations
 
+import functools
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -38,13 +39,35 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
+def releasing(fn: QueryFn) -> QueryFn:
+    """``fn`` that first releases the previous query's tracked checkpoints
+    (models.common.QUERY_CHECKPOINTS), so a caller that runs queries one
+    after another holds at most one query's worth."""
+
+    @functools.wraps(fn)
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from .models.common import release_query_checkpoints
+
+        release_query_checkpoints()
+        return fn(spark, sf_dir)
+
+    return run
+
+
 def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
-    """Decorator: register a declared query (SURVEY.md §2 inventory)."""
+    """Decorator: register a declared query (SURVEY.md §2 inventory).
+
+    ``REGISTRY[name].fn`` is ``releasing(fn)``, so every entry point —
+    ``__spark_entry__.queries()`` included — releases between queries. The
+    decorator returns the raw function: operators that build on another
+    query call it directly and must not release mid-build."""
 
     def deco(fn: QueryFn) -> QueryFn:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = Query(name=name, fn=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = Query(
+            name=name, fn=releasing(fn), oracle=oracle, doc=fn.__doc__ or ""
+        )
         return fn
 
     return deco
@@ -74,118 +97,44 @@ def load_all_operators() -> None:
 
 
 # The driver's CORRECTNESS gate checks the first 50 entries of ``queries()``
-# per round, so coverage rotates: this list fronts the names that most need
-# a driver verdict; every name NOT listed here is already driver-green
-# (CORRECTNESS_r01-r07) and falls back to registration order behind them.
-# Round-8 front, in order (VERDICT r07 items 1+3): cumulative driver-green
-# is 330/421 after seven rounds; this list is the round's one red row plus
-# the 90-query never-checked queue —
-#   (a) recs_intra_list_diversity FIRST: its r07 hash miss was an oracle
-#       dtype bug (int / yields DOUBLE in DuckDB; now CAST ... AS BIGINT,
-#       operators/windows.py) and the driver must re-check it green;
-#   (b) the recurrence/stateful kernels (inventory FIFO, changepoint fit,
-#       seasonal decompose, Nelson-Aalen, quantile normalize);
-#   (c) the float-surface statistics (ACF, Cramer's V, ECE, delta-method,
-#       Qini, causal-impact, permutation test);
-#   (d) the ranking/eval reports (percentile_disc, equi-depth histogram,
-#       RBO drift, Wilson CI, split-leakage audit);
-#   (e) the remaining candidates-then-verify members (geo-grid kNN,
-#       blocking quality, Bloom FPR, covisitation, itemsets);
-#   (f) then the queue oldest-first — 41 names carry to round 9, which
-#       closes full-registry driver coverage.
+# per round. Every registered query had been checked there by round 9, so
+# this list fronts the queries whose code changed since the last fully
+# green round (round 8): the two model-fit queries, whose error cache was
+# restored to the round-8 layout, then every query function round 9 edited
+# or whose helper it edited (``git diff 355ebaa 93d26c1``). The rest follow
+# in registration order.
 DRIVER_PRIORITY: list[str] = [
-    "recs_intra_list_diversity",
-    "inventory_fifo_matching",
-    "revenue_changepoint_fit",
-    "seasonal_decompose_additive",
-    "survival_nelson_aalen",
+    "funk_svd_fit_metrics",
+    "als_fit_metrics",
+    "timeseries_resample",
+    "data_drift_psi",
+    "chi2_independence",
+    "pareto_frontier_2d",
+    "abc_classification",
     "quantile_normalize",
-    "acf_daily_revenue",
     "cramers_v_matrix",
-    "expected_calibration_error",
-    "ratio_metric_delta_method",
-    "qini_uplift_deciles",
-    "causal_impact_lite",
-    "permutation_test_diff",
-    "percentile_disc_exact",
-    "histogram_equi_depth",
-    "ranking_rbo_drift",
-    "wilson_ci_ranking",
-    "split_leakage_audit",
-    "geo_grid_knn",
+    "dedup_sorted_neighborhood",
     "blocking_quality_eval",
-    "bloom_fpr_audit",
-    "covisitation_timebound",
-    "frequent_itemsets_l3",
-    "concurrent_intervals_daily",
-    "dedup_keep_best",
-    "snapshot_diff",
-    "nth_value_suite",
-    "events_since_purchase",
-    "pivot_multi_measure",
-    "running_compound_growth",
-    "array_set_ops_suite",
-    "new_vs_returning_daily",
-    "frequency_cap",
-    "churn_risk_flags",
-    "string_functions_extra",
-    "bitwise_ops_suite",
-    "boolean_agg_suite",
-    "rolling_zscore",
-    "monotonicity_audit",
-    "share_of_parent",
-    "join_fallback_hierarchy",
-    "weighted_moving_avg",
-    "trimmed_mean_grouped",
-    "surrogate_keys",
-    "table_fingerprint",
-    "session_window_dynamic_gap",
-    "feature_minmax_scale",
-    "peak_activity_cell",
-    "quality_stratified_sample",
-    "corpus_jsonl_gz_roundtrip",
-    "rolling_distinct_users_7d",
-    "session_entropy",
-    "funnel_step_deadlines",
-    "grouped_ols_2var",
-    "daily_crosscorr_lags",
-    "woe_iv_binning",
-    "diff_in_diff",
-    "ab_srm_check",
-    "largest_remainder_apportionment",
-    "attribution_position_based",
-    "feature_robust_scale",
-    "dp_noisy_counts",
-    "record_linkage_fs_weights",
-    "sequence_regex_match",
+    "dedup_clusters",
+    "dedup_fuzzy_clusters",
+    "multimodal_dup_clusters",
+    "conformal_prediction_interval",
+    "isotonic_calibration",
+    "pagerank_items",
+    "graph_bfs_levels",
+    "personalized_pagerank",
+    "label_propagation_communities",
     "graph_shortest_paths_weighted",
-    "ipw_ate_by_segment",
-    "forecast_backtest_mase",
-    "ab_sequential_sprt",
-    "graph_degree_assortativity",
-    "burstiness_interevent",
-    "bayes_beta_binomial",
-    "dau_mau_stickiness",
-    "herfindahl_concentration",
-    "xyz_variability_classes",
-    "slo_burn_alerts",
-    "growth_accounting_weekly",
-    "ab_cuped_adjustment",
-    "user_segment_bitmaps",
-    "embedding_outlier_flags",
-    "attribution_time_decay",
-    "funnel_within_window",
-    "metric_change_contribution",
-    "team_draft_interleaving",
-    "join_cardinality_estimate",
-    "event_lateness_profile",
-    "k_anonymity_audit",
-    "price_volume_mix_bridge",
-    "reorder_point_policy",
-    "net_revenue_retention",
-    "cart_abandonment_daily",
-    "text_boilerplate_share",
-    "dedup_containment_sweep",
+    "graph_triangle_stats",
+    "dq_rule_violations",
+    "similarity_ann_ivf",
+    "dedup_embedding_cosine",
+    "doc_similarity_sparse",
+    "vocab_coverage",
+    "item_cf_similarity",
+    "mmr_rerank",
+    "stream_bin_pack",
+    "stream_queue_lindley",
 ]
 
 

@@ -48,10 +48,6 @@ def main() -> None:
 
     encoded_ratings(spark, SF_DIR).count()
 
-    from dask_recommender_system_spark.models.common import (
-        release_query_checkpoints,
-    )
-
     import importlib
     _bench = importlib.import_module("bench")
 
@@ -66,7 +62,6 @@ def main() -> None:
         )
         with open(os.path.join(PLAN_DIR, f"{name}_{tag}.txt"), "w") as f:
             f.write(plan)
-        release_query_checkpoints()
         counts, noops = [], []
         for run_i in range(RUNS):
             grp = f"profile:{name}:count:{run_i}"
@@ -75,7 +70,6 @@ def main() -> None:
             fn(spark, SF_DIR).count()
             counts.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
-            release_query_checkpoints()
         c_count = _bench._group_counters(sc, grp)
         for run_i in range(RUNS):
             grp = f"profile:{name}:noop:{run_i}"
@@ -84,7 +78,6 @@ def main() -> None:
             fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
             noops.append(round(time.perf_counter() - t0, 3))
             spark.catalog.clearCache()
-            release_query_checkpoints()
         c_noop = _bench._group_counters(sc, grp)
         counts.sort(), noops.sort()
         out[name] = {
