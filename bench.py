@@ -19,7 +19,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -254,54 +253,6 @@ HEADLINE_QUERIES = [
 ]
 
 
-def _group_counters(sc, group: str) -> dict[str, object]:
-    """Machine-independent execution counters for every Spark job tagged
-    with ``group`` (VERDICT r08 item 1: the driver's wall-clock runs land
-    on drifting machine states, so the bench must also emit numbers a
-    plan change moves and host load cannot — job/stage counts and
-    shuffle/input bytes). Job ids come from the public StatusTracker;
-    per-stage bytes from the JVM AppStatusStore (the same guarded
-    private-reach discipline as models/common.release_checkpoint — any
-    failure returns a partial/empty dict, never breaks the bench)."""
-    out: dict[str, object] = {}
-    try:
-        tracker = sc.statusTracker()
-        store = sc._jsc.sc().statusStore()
-        jobs = stages = skipped = tasks = 0
-        sr = sw = inp = 0
-        for jid in tracker.getJobIdsForGroup(group):
-            jobs += 1
-            info = tracker.getJobInfo(jid)
-            if info is None:
-                continue
-            for sid in info.stageIds:
-                try:
-                    s = store.lastStageAttempt(sid)
-                except Exception:
-                    # no attempt recorded => the whole stage was skipped
-                    # (exchange/cache reuse) — structurally meaningful,
-                    # counted separately
-                    skipped += 1
-                    continue
-                stages += 1
-                tasks += s.numCompleteTasks()
-                sr += s.shuffleReadBytes()
-                sw += s.shuffleWriteBytes()
-                inp += s.inputBytes()
-        out = {
-            "jobs": jobs,
-            "stages": stages,
-            "skipped_stages": skipped,
-            "tasks": tasks,
-            "shuffle_read_mb": round(sr / 1e6, 3),
-            "shuffle_write_mb": round(sw / 1e6, 3),
-            "input_mb": round(inp / 1e6, 3),
-        }
-    except Exception:
-        pass
-    return out
-
-
 def _planted_holdout_rmse(spark) -> dict[str, float]:
     """Held-out RMSE on the planted-factor fixture (the quantity
     tests/test_model_metrics.py gates) — reported next to the sf0.1 train
@@ -350,39 +301,24 @@ def _planted_holdout_rmse(spark) -> dict[str, float]:
 
 
 def main() -> None:
-    from pyspark.sql import functions as F
-
+    from dask_recommender_system_spark.data import ratings_cached
     from dask_recommender_system_spark.models import ALS, FunkSVD
-    from dask_recommender_system_spark.registry import REGISTRY, load_all_operators
+    from dask_recommender_system_spark.registry import (
+        ACTIONS,
+        REGISTRY,
+        load_all_operators,
+        timed,
+        warm,
+    )
     from dask_recommender_system_spark.session import get_spark
 
     load_all_operators()
     spark = get_spark("drs-bench")
-    # JVM/session warmup so the first timed query doesn't absorb startup
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-    # materialize the derive-once ratings view up front: its one-time
-    # write is ingest cost (BENCH_NOTES), not query cost — the trimmed
-    # median would discard it anyway, this just makes run 1 comparable
-    from dask_recommender_system_spark.data import ratings_cached
-
-    spark.sparkContext.setJobGroup("bench:ratings_cache_ingest", "ratings ingest")
-    t0 = time.perf_counter()
-    ratings_cached(spark, SF_DIR).count()
-    # one-time materialization cost, recorded as ingest (ADVICE r07: the
-    # pre-warm moved this out of every measured query; it must still be
-    # visible somewhere). The cache is process-scoped (r08), so every
-    # bench invocation pays and records this cost afresh. Since r09 it is
-    # ALSO a timed key counted in bench_total (VERDICT r08 item 3).
-    ratings_cache_ingest_s = round(time.perf_counter() - t0, 3)
-    # same discipline for the shared dedup+encode view (r08): ~17 queries
-    # across the linalg/evaluation families read it; its one-time build is
-    # ingest, recorded separately, paid once per process
-    from dask_recommender_system_spark.operators.linalg import encoded_ratings
-
-    spark.sparkContext.setJobGroup("bench:encoded_cache_ingest", "encoded ingest")
-    t0 = time.perf_counter()
-    encoded_ratings(spark, SF_DIR).count()
-    encoded_cache_ingest_s = round(time.perf_counter() - t0, 3)
+    # JVM warmup plus the derive-once ratings and dedup+encode views, built
+    # up front: their one-time write is ingest cost, not the first query's.
+    # The caches are process-scoped (r08), so every bench invocation pays
+    # and records this cost afresh, as two timed keys (VERDICT r08 item 3).
+    ingest = warm(spark, SF_DIR)
 
     # Median of N runs per query (VERDICT r04 item 3: round-over-round
     # drift on untouched queries was indistinguishable from sweep
@@ -395,69 +331,40 @@ def main() -> None:
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3")))
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
-    counters: dict[str, dict] = {}
-    sc = spark.sparkContext
-    counters["ratings_cache_ingest"] = _group_counters(
-        sc, "bench:ratings_cache_ingest"
-    )
-    counters["encoded_cache_ingest"] = _group_counters(
-        sc, "bench:encoded_cache_ingest"
-    )
-    for name in BENCH_QUERIES:
-        runs = []
-        q_runs = max(n_runs, 5) if name in NOISY_QUERIES else n_runs
-        for run_i in range(q_runs):
-            # one job group per (query, run): the LAST (warmed) run's
-            # machine-independent counters are recorded next to the
-            # timing — a plan regression moves them, host drift cannot
-            group = f"bench:{name}:{run_i}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            n = REGISTRY[name].fn(spark, SF_DIR).count()
-            runs.append(time.perf_counter() - t0)
-            assert n >= 0
-            sc.setJobGroup("bench:hygiene", "cache/checkpoint hygiene")
-            # queries that persist() intermediates must not bill the next
-            # run/query for their executor-memory footprint (the registry
-            # releases their tracked checkpoints when the next one starts)
-            spark.catalog.clearCache()
-            if run_i == q_runs - 1:
-                counters[name] = _group_counters(sc, group)
-        runs.sort()
-        timings[name] = round(runs[len(runs) // 2], 3)
+    counters: dict[str, dict] = {key: t.counters for key, t in ingest.items()}
+
+    # r08 measurement-bug note (guide §1.4): the optimized
+    # ngram_novelty_score attaches novel counts via a LEFT join, so
+    # count() prunes the whole novelty-aggregate subtree and the
+    # count-timed number stops measuring the query's work. The count key
+    # stays (comparable across rounds); the ``_noop`` key times the noop
+    # sink, which computes every column.
+    runs_of = [
+        (name, name, "count", max(n_runs, 5) if name in NOISY_QUERIES else n_runs)
+        for name in BENCH_QUERIES
+    ] + [("ngram_novelty_score_noop", "ngram_novelty_score", "noop", n_runs)]
+    for key, name, action, q_runs in runs_of:
+        # one job group per (key, run): the LAST (warmed) run's
+        # machine-independent counters are recorded next to the timing —
+        # a plan regression moves them, host drift cannot
+        runs = [
+            timed(
+                spark,
+                f"bench:{key}:{run_i}",
+                lambda: ACTIONS[action](REGISTRY[name].fn(spark, SF_DIR)),
+            )
+            for run_i in range(q_runs)
+        ]
+        counters[key] = runs[-1].counters
+        walls = sorted(t.wall_s for t in runs)
+        timings[key] = round(walls[len(walls) // 2], 3)
         # spread measures the stability of the region the MEDIAN comes
         # from: at n >= 5 the min/max are dropped first (the raw range
         # GROWS with n, so range-of-5 would flag more noise on the same
         # query than range-of-3 measured — the one-off GC/crowding run the
         # median already discards shouldn't count against it either)
-        core = runs[1:-1] if len(runs) >= 5 else runs
-        spreads[name] = round(core[-1] - core[0], 3)
-
-    # r08 measurement-bug note (guide §1.4): the optimized
-    # ngram_novelty_score attaches novel counts via a LEFT join, so
-    # count() now prunes the whole novelty-aggregate subtree (row count =
-    # |docs| regardless) and the count-timed number stops measuring the
-    # query's work. The old key stays (count-timed, comparable across
-    # rounds); this ADDS a noop-sink-timed entry that computes every
-    # column (never remove/rename existing keys — driver contract).
-    for name in ["ngram_novelty_score"]:
-        runs = []
-        for run_i in range(n_runs):
-            group = f"bench:{name}_noop:{run_i}"
-            sc.setJobGroup(group, f"{name}_noop")
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            runs.append(time.perf_counter() - t0)
-            sc.setJobGroup("bench:hygiene", "cache/checkpoint hygiene")
-            spark.catalog.clearCache()
-            if run_i == n_runs - 1:
-                counters[f"{name}_noop"] = _group_counters(sc, group)
-        runs.sort()
-        timings[f"{name}_noop"] = round(runs[len(runs) // 2], 3)
-        core = runs[1:-1] if len(runs) >= 5 else runs
-        spreads[f"{name}_noop"] = round(core[-1] - core[0], 3)
+        core = walls[1:-1] if len(walls) >= 5 else walls
+        spreads[key] = round(core[-1] - core[0], 3)
 
     # training benchmark: reference-parity FunkSVD, k=30 (report.pdf config).
     # Marginal s/epoch comes from the models' own per-epoch timers
@@ -468,30 +375,33 @@ def main() -> None:
     # difference (observed 3x swings on identical code).
     r = ratings_cached(spark, SF_DIR)
     n_ratings = r.count()
-    model = FunkSVD(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=FUNK_EPOCHS)
-    sc.setJobGroup("bench:funk_svd_fit_total", "funk_svd_fit_total")
-    t0 = time.perf_counter()
-    model.fit(r, user_col="user_id", item_col="item_id", rating_col="rating")
-    total_s = time.perf_counter() - t0
-    counters["funk_svd_fit_total"] = _group_counters(
-        sc, "bench:funk_svd_fit_total"
-    )
-    tail = model.epoch_times[1:]
+
+    def fit(key: str, model, **kw):
+        t = timed(
+            spark,
+            f"bench:{key}",
+            lambda: model.fit(
+                r, user_col="user_id", item_col="item_id", rating_col="rating", **kw
+            ),
+        )
+        timings[key] = round(t.wall_s, 3)
+        counters[key] = t.counters
+        return t.value
+
+    tail = fit(
+        "funk_svd_fit_total",
+        FunkSVD(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=FUNK_EPOCHS),
+    ).epoch_times[1:]
     epoch_s = sum(tail) / len(tail)
     timings["funk_svd_epoch"] = round(epoch_s, 3)
-    timings["funk_svd_fit_total"] = round(total_s, 3)
 
     # ALS marginal s/epoch (reference: ~1.5x FunkSVD — two error recomputes
     # per epoch, report.pdf §7.2.1; their local number is 14.39 s/epoch)
-    model = ALS(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=FUNK_EPOCHS)
-    sc.setJobGroup("bench:als_fit_total", "als_fit_total")
-    t0 = time.perf_counter()
-    model.fit(r, user_col="user_id", item_col="item_id", rating_col="rating")
-    als_total_s = time.perf_counter() - t0
-    counters["als_fit_total"] = _group_counters(sc, "bench:als_fit_total")
-    als_tail = model.epoch_times[1:]
+    als_tail = fit(
+        "als_fit_total",
+        ALS(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=FUNK_EPOCHS),
+    ).epoch_times[1:]
     timings["als_epoch"] = round(sum(als_tail) / len(als_tail), 3)
-    timings["als_fit_total"] = round(als_total_s, 3)
 
     # 100-epoch endurance run at the reference's published config
     # (BASELINE.md Tables 2-3 report 100-epoch totals: 966 s FunkSVD at
@@ -503,31 +413,17 @@ def main() -> None:
     # SPARK_GRAFT_ENDURANCE=0 skips it when iterating locally.
     # Throughput from the 5-epoch tail mean — always present, mode-stable
     # (same meaning with or without the endurance segment below).
-    extras: dict[str, object] = {
-        "ratings_per_s_per_epoch": round(n_ratings / epoch_s),
-        "ratings_cache_ingest_s": ratings_cache_ingest_s,
-        "encoded_cache_ingest_s": encoded_cache_ingest_s,
-    }
+    extras: dict[str, object] = {"ratings_per_s_per_epoch": round(n_ratings / epoch_s)}
     # VERDICT r08 item 3: the two one-time view builds are real
-    # per-invocation work — count them in bench_total as timed keys
-    # (ADDED keys; the extras fields above keep their names and meaning,
-    # and no existing key changes)
-    timings["ratings_cache_ingest"] = ratings_cache_ingest_s
-    timings["encoded_cache_ingest"] = encoded_cache_ingest_s
+    # per-invocation work — counted in bench_total as timed keys, and
+    # kept under their older ``_s`` extras names too
+    for key, t in ingest.items():
+        timings[key] = extras[f"{key}_s"] = round(t.wall_s, 3)
     if os.environ.get("SPARK_GRAFT_ENDURANCE", "1") != "0":
-        model = FunkSVD(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=100)
-        sc.setJobGroup("bench:funk_svd_100ep", "funk_svd_fit_total_100ep")
-        t0 = time.perf_counter()
-        model.fit(
-            r,
-            user_col="user_id",
-            item_col="item_id",
-            rating_col="rating",
+        model = fit(
+            "funk_svd_fit_total_100ep",
+            FunkSVD(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=100),
             collect_errors=True,
-        )
-        timings["funk_svd_fit_total_100ep"] = round(time.perf_counter() - t0, 3)
-        counters["funk_svd_fit_total_100ep"] = _group_counters(
-            sc, "bench:funk_svd_100ep"
         )
         et = model.epoch_times
         extras["funk_svd_100ep_first10_s"] = round(sum(et[:10]) / 10, 3)

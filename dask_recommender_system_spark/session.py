@@ -30,7 +30,7 @@ def get_spark(app_name: str = "dask-recommender-system-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # the bench's machine-independent counters (bench._group_counters)
+        # the harnesses' machine-independent counters (registry.group_counters)
         # read job/stage data back from the AppStatusStore; the 1000-entry
         # defaults evict a 100-epoch fit's ~1400 jobs before they can be
         # counted. ~8k JobData/StageData entries are a few MB of driver

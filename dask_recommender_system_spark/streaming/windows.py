@@ -193,17 +193,17 @@ def tumbling_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-def run_stream_to_memory(agg: DataFrame, name: str) -> None:
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
+def drain_stream(df: DataFrame, mode: str) -> DataFrame:
+    """Run ``df`` into a uniquely named memory sink in output ``mode``,
+    drain everything available, stop the stream (on failure too) and
+    return the sink as a batch table."""
+    name = f"strm_{uuid.uuid4().hex[:8]}"
+    q = df.writeStream.outputMode(mode).format("memory").queryName(name).start()
     try:
         q.processAllAvailable()
     finally:
         q.stop()
+    return df.sparkSession.table(name)
 
 
 @query(
@@ -215,10 +215,8 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink, drained synchronously; checked against the *batch* oracle
     so streaming and batch share one correctness definition."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     agg = tumbling_counts(read_events_stream(spark, sf_dir))
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain_stream(agg, "complete")
 
 
 def sliding_counts(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -241,10 +239,8 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark, drained to a memory sink; same DuckDB oracle as the batch
     `window_events_sliding` — one correctness definition across modes."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     agg = sliding_counts(read_events_stream(spark, sf_dir))
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain_stream(agg, "complete")
 
 
 @query(
@@ -280,18 +276,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "hour_start"])
         .select("user_id", "event_type", "hour_start")
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        deduped.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_stream(deduped, "append")
 
 
 @query(
@@ -323,9 +308,7 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain_stream(agg, "complete")
 
 
 @query(
@@ -389,13 +372,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("purchase_tss").alias("purchase_ts"),
         F.round("purchase_value", 6).alias("purchase_value"),
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_stream(joined, "append")
 
 
 @query(
@@ -415,13 +392,7 @@ def stream_parse_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = write_log_lines(spark, sf_dir)
     parsed = parse_log_lines(spark.readStream.text(path))
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = parsed.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_stream(parsed, "append")
 
 
 @query(
@@ -534,13 +505,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", F.unix_timestamp("ts").alias("ts_s")
     )
     out = apply_sessionization(stream)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_stream(out, "append")
 
 
 STREAM_HLL_BOUND = 0.05  # HLL++ default lgK rel-err ~1.6%; headroom for tiny windows
@@ -572,7 +537,6 @@ def stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -580,8 +544,7 @@ def stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.hll_sketch_agg("user_id").alias("sk"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "sk")
     )
-    run_stream_to_memory(agg, name)
-    sketches = spark.table(name)
+    sketches = drain_stream(agg, "complete")
     exact = (
         load_table(spark, sf_dir, "events")
         .groupBy(
@@ -655,7 +618,6 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.analytics import PSI_BIN_MAX, PSI_BIN_W
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -669,8 +631,7 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.unix_timestamp("w.start").alias("h"), "bin", "n")
     )
-    run_stream_to_memory(agg, name)
-    cells = spark.table(name)
+    cells = drain_stream(agg, "complete")
     mid = cells.agg(((F.min("h") + F.max("h")) / 2).alias("m"))
     c = (
         cells.crossJoin(F.broadcast(mid))
@@ -739,7 +700,6 @@ def stream_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the cells table is what you persist; re-ranking with a
     different k is cell arithmetic, never an event replay."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     cells = (
         ev.withColumn("p", F.from_json("props", "k BIGINT"))
@@ -751,8 +711,7 @@ def stream_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "item_k", "n")
     )
-    run_stream_to_memory(cells, name)
-    drained = spark.table(name)
+    drained = drain_stream(cells, "complete")
     rk = W.partitionBy("window_start").orderBy(F.col("n").desc(), "item_k")
     return (
         drained.withColumn("rnk", F.row_number().over(rk).cast("long"))
@@ -895,18 +854,7 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     enriched = stream.join(F.broadcast(dim), "user_id").select(
         "event_id", "user_id", "segment", "nation", "value"
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        enriched.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    return drain_stream(enriched, "append")
 
 
 @query(
@@ -941,7 +889,6 @@ def stream_kll_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
 
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    name = f"strm_{uuid.uuid4().hex[:8]}"
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -949,8 +896,7 @@ def stream_kll_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.kll_sketch_agg_double("value").alias("sk"))
         .select(F.unix_timestamp("w.start").alias("window_start"), "sk")
     )
-    run_stream_to_memory(agg, name)
-    sketches = spark.table(name).select(
+    sketches = drain_stream(agg, "complete").select(
         "window_start",
         F.kll_sketch_get_quantile_double("sk", F.lit(0.5)).alias("est_p50"),
     )
@@ -1136,18 +1082,7 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sum_value",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sink = spark.table(name)
+    sink = drain_stream(agg, "update")
     # last emission per key wins; n is monotonically nondecreasing per
     # key across emissions, so max_by on n with sum_value tiebreak IS the
     # final state
@@ -1233,9 +1168,7 @@ def stream_daily_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["user_id", "day"]
     )
     agg = dd.groupBy("day").agg(F.count("*").alias("dau"))
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(agg, name)
-    return spark.table(name)
+    return drain_stream(agg, "complete")
 
 
 @query(
@@ -1317,18 +1250,7 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("click_tss").alias("click_ts"),
         F.unix_timestamp("purchase_tss").alias("purchase_ts"),
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        joined.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("click_id")
+    return drain_stream(joined, "append").orderBy("click_id")
 
 
 @query(
@@ -1364,18 +1286,7 @@ def stream_hysteresis_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     out = apply_hysteresis(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("user_id", "sec", "event_id")
+    return drain_stream(out, "append").orderBy("user_id", "sec", "event_id")
 
 
 @query(
@@ -1437,10 +1348,8 @@ def stream_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "1 hour").alias("w"), "j", "bucket")
         .agg(F.count("*").alias("c"))
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    run_stream_to_memory(hourly, name)
     return (
-        spark.table(name)
+        drain_stream(hourly, "complete")
         .groupBy("j", "bucket")
         .agg(F.sum("c").alias("c"))
         .orderBy("j", "bucket")
@@ -1475,18 +1384,7 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_timestamp("ts").alias("sec"),
     )
     out = apply_token_bucket(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("user_id", "sec", "event_id")
+    return drain_stream(out, "append").orderBy("user_id", "sec", "event_id")
 
 
 def _bp_oracle() -> str:
@@ -1553,18 +1451,7 @@ def stream_bin_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     items = o.join(li, "orderkey")
     out = apply_bin_pack(items)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("custkey", "day", "orderkey")
+    return drain_stream(out, "append").orderBy("custkey", "day", "orderkey")
 
 
 @query(
@@ -1618,18 +1505,7 @@ def stream_dau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dau",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("day")
+    return drain_stream(agg, "append").orderBy("day")
 
 
 @query(
@@ -1702,18 +1578,7 @@ def stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
             "e",
         )
     )
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        hourly.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    h = spark.table(name)
+    h = drain_stream(hourly, "append")
     grid = h.agg(F.min("hour").alias("h0"), F.max("hour").alias("h1")).select(
         F.explode(F.sequence("h0", "h1")).alias("hour")
     )
@@ -1833,18 +1698,7 @@ def stream_queue_lindley(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("nation", "orderkey", "arr_s", "svc_s")
     )
     out = apply_lindley(items)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("nation", "arr_s", "orderkey")
+    return drain_stream(out, "append").orderBy("nation", "arr_s", "orderkey")
 
 
 @query(
@@ -1923,18 +1777,7 @@ def stream_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
     )
     out = apply_sessionization_outcomes(ev)
-    name = f"strm_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    sess = spark.table(name)
+    sess = drain_stream(out, "append")
     ab = F.when(
         (F.col("has_click") == 1) & (F.col("has_purchase") == 0), 1
     ).otherwise(0)

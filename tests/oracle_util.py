@@ -4,8 +4,12 @@ here predicts a pass in CORRECTNESS_r{N}.json."""
 
 from __future__ import annotations
 
+import json
 import math
 import os
+import sys
+import traceback
+from collections.abc import Callable
 
 import duckdb
 import pandas as pd
@@ -114,3 +118,71 @@ def compare(spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame, name: str) -> lis
                     f"{name}: column {c}: {neq} mismatches (first: {sv[idx]!r} vs {ov[idx]!r})"
                 )
     return problems
+
+
+def check(
+    run: Callable[[], pd.DataFrame],
+    con: duckdb.DuckDBPyConnection,
+    name: str,
+    oracle: str | None,
+) -> dict:
+    """The CORRECTNESS_*.json record of one query: ``run()`` gives
+    the engine's rows, ``oracle`` is its DuckDB SQL (None: rows only). An
+    exception from either side lands in ``err`` as a traceback."""
+    rec: dict = dict.fromkeys(
+        ("rows_match", "schema_match", "hash_match", "spark_rows", "oracle_rows", "err")
+    )
+    try:
+        spark_pdf = run()
+        rec["spark_rows"] = len(spark_pdf)
+        if oracle is None:
+            rec["err"] = "no_oracle"
+            return rec
+        oracle_pdf = con.sql(oracle).df()
+        rec["oracle_rows"] = len(oracle_pdf)
+        problems = compare(spark_pdf, oracle_pdf, name)
+        rec["rows_match"] = len(spark_pdf) == len(oracle_pdf)
+        rec["schema_match"] = not any("columns" in p for p in problems)
+        rec["hash_match"] = not problems
+        rec["err"] = "; ".join(problems) or None
+    except Exception:
+        rec["err"] = traceback.format_exc(limit=3)
+    return rec
+
+
+def sweep(
+    spark,
+    sf_dir: str,
+    con: duckdb.DuckDBPyConnection,
+    names: list[str],
+    fns: dict[str, Callable],
+    oracles: dict[str, str],
+    out: str,
+) -> None:
+    """``check`` every name in turn, print its status, write the records to
+    ``out`` as JSON and exit 1 if any query failed."""
+    from dask_recommender_system_spark.registry import ACTIONS
+
+    results: dict[str, dict] = {}
+    for name in names:
+        rec = results[name] = check(
+            lambda: ACTIONS["pandas"](fns[name](spark, sf_dir)),
+            con,
+            name,
+            oracles.get(name),
+        )
+        spark.catalog.clearCache()
+        status = (
+            "PASS"
+            if rec["hash_match"]
+            else ("rows-only" if rec["err"] == "no_oracle" else "FAIL")
+        )
+        print(f"{name}: {status}", flush=True)
+    with open(out, "w") as f:
+        json.dump(results, f, indent=2)
+    n_pass = sum(1 for r in results.values() if r["hash_match"])
+    n_ro = sum(1 for r in results.values() if r["err"] == "no_oracle")
+    n_fail = len(results) - n_pass - n_ro
+    print(f"\n{len(results)} queries: {n_pass} pass, {n_ro} rows-only, {n_fail} FAIL")
+    if n_fail:
+        sys.exit(1)

@@ -1,16 +1,20 @@
 """Static gate: catches name and import breakage before any Spark test runs.
 
 Stdlib only, no SparkSession; the file name sorts first under
-``pytest tests/``. Four checks over every module of the package:
+``pytest tests/``. Four checks over every module of the package and every
+harness script (``bench.py``, ``correctness_local.py``,
+``__spark_entry__.py``, ``tools/*.py``, loaded by path, since no test
+imports them):
 
-1. every module imports, and ``load_all_operators()`` registers every query;
+1. every module imports, every harness loads, and ``load_all_operators()``
+   registers every query;
 2. every ``LOAD_GLOBAL`` in every function (nested ones and lambdas
    included, found by walking ``co_consts`` with ``dis``) names a module
    global or a builtin;
 3. every ``from X import Y`` in the source, function-local ones included,
    resolves;
-4. every call ``f(...)`` whose bare name ``f`` resolves to a package
-   function binds against ``inspect.signature(f)``.
+4. every call ``f(...)`` whose bare name ``f`` resolves to a package,
+   harness or ``oracle_util`` function binds against ``inspect.signature(f)``.
 
 pyflakes and ruff would cover 2 and 3, but neither is a dependency here.
 """
@@ -19,9 +23,12 @@ from __future__ import annotations
 
 import ast
 import builtins
+import contextlib
 import dis
 import importlib
+import importlib.util
 import inspect
+import sys
 import types
 from pathlib import Path
 
@@ -51,10 +58,54 @@ def _modules() -> dict[str, tuple[types.ModuleType | None, Path, ast.Module, str
 
 MODULES = _modules()
 
+REPO = Path(PKG.__file__).parent.parent
+HARNESS_PREFIX = "_harness_"
+
+
+def _harnesses():
+    """Like ``_modules`` for the harness scripts, each executed from its
+    path under a private module name. The ``sys.path`` entries they add
+    are returned and taken back out, so the rest of the suite does not
+    see them."""
+    files = [REPO / "bench.py", REPO / "correctness_local.py", REPO / "__spark_entry__.py"]
+    files += sorted((REPO / "tools").glob("*.py"))
+    saved, out = list(sys.path), {}
+    for path in files:
+        name = str(path.relative_to(REPO))
+        modname = HARNESS_PREFIX + path.stem
+        try:
+            spec = importlib.util.spec_from_file_location(modname, path)
+            mod = sys.modules[modname] = importlib.util.module_from_spec(spec)
+            spec.loader.exec_module(mod)
+            err = ""
+        except Exception as e:  # any failure is a finding
+            mod, err = None, f"{type(e).__name__}: {e}"
+        out[name] = (mod, path, ast.parse(path.read_text(), str(path)), err)
+    added = [p for p in sys.path if p not in saved]
+    sys.path[:] = saved
+    return out, added
+
+
+HARNESSES, HARNESS_PATHS = _harnesses()
+ALL = {**MODULES, **HARNESSES}
+
+
+@contextlib.contextmanager
+def _harness_sys_path():
+    """The harnesses' own ``sys.path`` additions (repo root, ``tests/``), for
+    resolving their imports."""
+    saved = list(sys.path)
+    sys.path[:0] = HARNESS_PATHS
+    try:
+        yield
+    finally:
+        sys.path[:] = saved
+
 
 def test_every_module_imports_and_registers_every_query():
-    failed = [f"{n}: {err}" for n, (_, _, _, err) in MODULES.items() if err]
+    failed = [f"{n}: {err}" for n, (_, _, _, err) in ALL.items() if err]
     assert not failed, "modules that do not import:\n" + "\n".join(failed)
+    assert len(HARNESSES) >= 10
     from dask_recommender_system_spark.registry import REGISTRY, load_all_operators
 
     load_all_operators()
@@ -71,7 +122,7 @@ def _code_objects(code: types.CodeType):
 
 def test_every_global_name_resolves():
     missing = []
-    for name, (mod, path, _, _) in MODULES.items():
+    for name, (mod, path, _, _) in ALL.items():
         if mod is None:
             continue  # reported by the import test
         top = compile(path.read_text(), str(path), "exec")
@@ -89,7 +140,7 @@ def _import_from_module(modname: str, node: ast.ImportFrom) -> str:
     if not node.level:
         return node.module
     parts = modname.split(".")
-    is_pkg = MODULES[modname][1].name == "__init__.py"
+    is_pkg = ALL[modname][1].name == "__init__.py"
     base = parts if is_pkg else parts[:-1]
     base = base[: len(base) - (node.level - 1)]
     return ".".join(base + ([node.module] if node.module else []))
@@ -104,9 +155,10 @@ def _resolve_from(target: str, attr: str):
     return importlib.import_module(f"{target}.{attr}")
 
 
+@_harness_sys_path()
 def test_every_from_import_resolves():
     bad = []
-    for name, (_, _, tree, _) in MODULES.items():
+    for name, (_, _, tree, _) in ALL.items():
         for node in ast.walk(tree):
             if not isinstance(node, ast.ImportFrom) or node.module == "__future__":
                 continue
@@ -185,7 +237,7 @@ class _CallBinder(ast.NodeVisitor):
         if not isinstance(node.func, ast.Name):
             return
         fn = self._lookup(node.func.id)
-        if not inspect.isfunction(fn) or not fn.__module__.startswith(PKG.__name__):
+        if not inspect.isfunction(fn) or not fn.__module__.startswith(CHECKED):
             return
         if any(isinstance(a, ast.Starred) for a in node.args) or any(
             k.arg is None for k in node.keywords
@@ -200,9 +252,13 @@ class _CallBinder(ast.NodeVisitor):
             self.bad.append(f"{self.modname}:{node.lineno} {node.func.id}(): {e}")
 
 
+CHECKED = (PKG.__name__, HARNESS_PREFIX, "oracle_util")
+
+
+@_harness_sys_path()
 def test_every_package_call_binds_its_signature():
     checked, bad = 0, []
-    for name, (mod, _, tree, _) in MODULES.items():
+    for name, (mod, _, tree, _) in ALL.items():
         if mod is None:
             continue  # reported by the import test
         v = _CallBinder(name, mod)

@@ -118,13 +118,18 @@ def test_epoch_loop_resource_discipline(spark, sf_dir):
     )
     released_before = RELEASE_STATS["released"]
 
+    jsc = spark.sparkContext._jsc
+
     def fit(epochs):
-        before = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        # count only the persistent RDDs this fit created (ids from a mark
+        # taken just before it): a net count before/after drops whenever
+        # the JVM's ContextCleaner frees an EARLIER fit's frames mid-fit
+        mark = jsc.sc().newRddId()
         m = FunkSVD(n_factors=4, lr=0.005, reg=0.001, epochs=epochs)
         m.fit(r, user_col="user_id", item_col="item_id", rating_col="rating")
-        after = spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+        leak = sum(1 for rdd_id in jsc.getPersistentRDDs().keySet() if rdd_id >= mark)
         est = m.u_params._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        return after - before, len(str(int(est)))
+        return leak, len(str(int(est)))
 
     fit(2)  # warmup: absorb ASYNC checkpoint-cleanup debt left by earlier
     # tests in this session — without it the first measured fit can see a

@@ -6,10 +6,9 @@ variants equally and the delta is attributable to the code change.
                                   <label_b> <module:callable_b> [count|noop]
 
 Each callable has the registry signature fn(spark, sf_dir) -> DataFrame.
-Old variants live in tools/ab_variants_r09.py (copies of the pre-change
-implementations, kept for audit). Runs SPARK_GRAFT_AB_RUNS (default 5)
-rounds of A,B; reports per-variant medians, spreads and the
-machine-independent counters of the last run of each variant."""
+Runs SPARK_GRAFT_AB_RUNS (default 5) rounds of A,B; reports per-variant
+medians, spreads and the machine-independent counters of the last run of
+each variant."""
 
 from __future__ import annotations
 
@@ -17,7 +16,6 @@ import importlib
 import json
 import os
 import sys
-import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -34,50 +32,37 @@ def _resolve(spec: str):
 def main() -> None:
     label_a, spec_a, label_b, spec_b = sys.argv[1:5]
     action = sys.argv[5] if len(sys.argv) > 5 else "noop"
-    from dask_recommender_system_spark.registry import load_all_operators, releasing
+    from dask_recommender_system_spark.registry import (
+        ACTIONS,
+        load_all_operators,
+        releasing,
+        timed,
+        warm,
+    )
     from dask_recommender_system_spark.session import get_spark
 
-    bench = importlib.import_module("bench")
     load_all_operators()
-    fn_a, fn_b = releasing(_resolve(spec_a)), releasing(_resolve(spec_b))
+    fns = {label_a: releasing(_resolve(spec_a)), label_b: releasing(_resolve(spec_b))}
     spark = get_spark("drs-ab")
-    sc = spark.sparkContext
-    spark.read.parquet(f"{SF_DIR}/region.parquet").count()
-    from dask_recommender_system_spark.data import ratings_cached
-    from dask_recommender_system_spark.operators.linalg import encoded_ratings
+    warm(spark, SF_DIR)
 
-    ratings_cached(spark, SF_DIR).count()
-    encoded_ratings(spark, SF_DIR).count()
+    def run_once(label: str, group: str):
+        return timed(spark, group, lambda: ACTIONS[action](fns[label](spark, SF_DIR)))
 
-    def run_once(fn, group):
-        sc.setJobGroup(group, group)
-        t0 = time.perf_counter()
-        df = fn(spark, SF_DIR)
-        if action == "count":
-            df.count()
-        else:
-            df.write.format("noop").mode("overwrite").save()
-        dt = time.perf_counter() - t0
-        spark.catalog.clearCache()
-        return dt
-
-    results = {label_a: [], label_b: []}
     # one unwarmed throwaway round so JIT/shuffle-file warmup hits neither
-    run_once(fn_a, "ab:warmup_a")
-    run_once(fn_b, "ab:warmup_b")
-    last_group = {}
+    for label in fns:
+        run_once(label, f"ab:warmup_{label}")
+    results: dict[str, list] = {label: [] for label in fns}
     for i in range(RUNS):
-        for label, fn in ((label_a, fn_a), (label_b, fn_b)):
-            g = f"ab:{label}:{i}"
-            results[label].append(round(run_once(fn, g), 3))
-            last_group[label] = g
-    out = {}
-    for label in (label_a, label_b):
-        runs = sorted(results[label])
+        for label in fns:
+            results[label].append(run_once(label, f"ab:{label}:{i}"))
+    out: dict[str, object] = {}
+    for label, runs in results.items():
+        walls = [round(t.wall_s, 3) for t in runs]
         out[label] = {
-            "median": runs[len(runs) // 2],
-            "runs": results[label],
-            "counters": bench._group_counters(sc, last_group[label]),
+            "median": sorted(walls)[len(walls) // 2],
+            "runs": walls,
+            "counters": runs[-1].counters,
         }
     out["speedup_b_over_a"] = round(
         out[label_a]["median"] / max(out[label_b]["median"], 1e-9), 3

@@ -4,32 +4,31 @@ The r07 `recs_intra_list_diversity` miss showed the residual risk class is
 harness-environment divergence: the builder's sweeps run under
 `session.get_spark` (UTC, Arrow, tuned shuffle), while the driver imports
 `__spark_entry__` with its OWN plain SparkSession. This tool replays the
-first N entries of `queries()` (the exact window the driver will check)
-through a deliberately plain, NON-UTC session and the dtype-strict
-comparator, writing a driver-format CORRECTNESS artifact — so any
-config-sensitive value (timezone, shuffle partitioning, Arrow behavior)
-surfaces builder-side before the driver runs.
+first 50 entries of `queries()` (the window the external correctness check
+reads), or the queries named on the command line, through a deliberately
+plain, NON-UTC session and the dtype-strict comparator, writing a
+CORRECTNESS-format artifact — so any config-sensitive value (timezone,
+shuffle partitioning, Arrow behavior) and any operator that forgets to pin
+its own timezone surfaces before that check runs.
 
     python tools/plain_session_replay.py                 # first 50, sf0.01
-    PLAIN_REPLAY_N=50 PLAIN_REPLAY_OUT=CORRECTNESS_r08_preflight.json \
-        python tools/plain_session_replay.py
+    python tools/plain_session_replay.py sql_interface_q13 sql_interface_q14
+    PLAIN_REPLAY_SF_DIR=<sf dir> PLAIN_REPLAY_OUT=out.json \
+        python tools/plain_session_replay.py <names>
 """
 
 from __future__ import annotations
 
-import json
 import os
 import sys
-import traceback
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
 
 SF_DIR = os.environ.get("PLAIN_REPLAY_SF_DIR", "/root/testdata/sf0.01")
-N = int(os.environ.get("PLAIN_REPLAY_N", "50"))
-OFFSET = int(os.environ.get("PLAIN_REPLAY_OFFSET", "0"))
 OUT = os.environ.get("PLAIN_REPLAY_OUT", "CORRECTNESS_r08_preflight.json")
+CHECK_WINDOW = 50
 
 
 def main() -> None:
@@ -49,58 +48,16 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     import __spark_entry__ as E
-    from oracle_util import compare, duckdb_con
+    from oracle_util import duckdb_con, sweep
 
-    flagship = E.entry(spark)
-    n_flagship = flagship.count()
-    print(f"entry() smoke: {n_flagship} rows", flush=True)
-
-    qs, oracles = E.queries(), E.oracle_sql()
-    window = list(qs)[OFFSET : OFFSET + N]
-    con = duckdb_con(SF_DIR)
-    results: dict[str, dict] = {}
-    for name in window:
-        rec: dict = {
-            "rows_match": None,
-            "schema_match": None,
-            "hash_match": None,
-            "spark_rows": None,
-            "oracle_rows": None,
-            "err": None,
-        }
-        try:
-            spark_pdf = qs[name](spark, SF_DIR).toPandas()
-            rec["spark_rows"] = len(spark_pdf)
-            if name not in oracles:
-                rec["err"] = "no_oracle"
-            else:
-                oracle_pdf = con.sql(oracles[name]).df()
-                rec["oracle_rows"] = len(oracle_pdf)
-                problems = compare(spark_pdf, oracle_pdf, name)
-                rec["rows_match"] = len(spark_pdf) == len(oracle_pdf)
-                rec["schema_match"] = not any("columns" in p for p in problems)
-                rec["hash_match"] = not problems
-                if problems:
-                    rec["err"] = "; ".join(problems)
-        except Exception:
-            rec["err"] = traceback.format_exc(limit=3)
-        results[name] = rec
-        spark.catalog.clearCache()
-        status = (
-            "PASS"
-            if rec["hash_match"]
-            else ("rows-only" if rec["err"] == "no_oracle" else "FAIL")
-        )
-        print(f"{name}: {status}", flush=True)
-
-    with open(os.path.join(REPO, OUT), "w") as f:
-        json.dump(results, f, indent=2)
-    n_pass = sum(1 for r in results.values() if r["hash_match"])
-    n_ro = sum(1 for r in results.values() if r["err"] == "no_oracle")
-    n_fail = len(results) - n_pass - n_ro
-    print(f"\n{len(results)} queries: {n_pass} pass, {n_ro} rows-only, {n_fail} FAIL")
-    if n_fail:
-        sys.exit(1)
+    print(f"entry() smoke: {E.entry(spark).count()} rows", flush=True)
+    qs = E.queries()
+    names = sys.argv[1:] or list(qs)[:CHECK_WINDOW]
+    unknown = [n for n in names if n not in qs]
+    if unknown:
+        raise SystemExit(f"unknown query names: {unknown}")
+    out = os.path.join(REPO, OUT)
+    sweep(spark, SF_DIR, duckdb_con(SF_DIR), names, qs, E.oracle_sql(), out)
 
 
 if __name__ == "__main__":

@@ -24,7 +24,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -263,12 +262,16 @@ def build_sf1(spark) -> None:
 def main() -> None:
     from dask_recommender_system_spark.data import load_table, ratings_from_df
     from dask_recommender_system_spark.models import FunkSVD
-    from dask_recommender_system_spark.registry import REGISTRY, load_all_operators
+    from dask_recommender_system_spark.registry import (
+        REGISTRY,
+        load_all_operators,
+        timed,
+        warm,
+    )
     from dask_recommender_system_spark.session import get_spark
 
     load_all_operators()
     spark = get_spark("drs-scale-probe")
-    spark.read.parquet(f"{SRC}/region.parquet").count()  # warmup
     build_sf1(spark)
     if "--build-only" in sys.argv:
         print(f"built {DST} ({COPIES} copies)", flush=True)
@@ -280,25 +283,24 @@ def main() -> None:
     # from earlier probe queries only ever ADD time). Default 1 keeps the
     # historical single-shot mode; the committed BENCH_sf1.json runs use 3.
     n_runs = max(1, int(os.environ.get("SPARK_GRAFT_PROBE_RUNS", "1")))
-    # prewarm the derive-once ratings view at both scales so the first
-    # ratings-consuming probe query doesn't bill the one-time cache write
-    from dask_recommender_system_spark.data import ratings_cached
-
+    # prewarm the derive-once views at both scales so the first probe
+    # query that reads one doesn't bill its one-time cache write
     for d in (SRC, DST):
-        ratings_cached(spark, d).count()
+        warm(spark, d)
     results: dict[str, dict] = {}
     for name in (PROBE_SUBSET or PROBE_QUERIES):
         row: dict = {}
         for label, d in (("sf0.1", SRC), (PROBE_LABEL, DST)):
-            best, n = None, 0
-            for _ in range(n_runs):
-                t0 = time.perf_counter()
-                n = REGISTRY[name].fn(spark, d).count()
-                el = time.perf_counter() - t0
-                best = el if best is None else min(best, el)
-                spark.catalog.clearCache()
-            row[label] = round(best, 3)
-            row[f"{label}_rows"] = n
+            runs = [
+                timed(
+                    spark,
+                    f"probe:{name}:{label}:{i}",
+                    lambda: REGISTRY[name].fn(spark, d).count(),
+                )
+                for i in range(n_runs)
+            ]
+            row[label] = round(min(t.wall_s for t in runs), 3)
+            row[f"{label}_rows"] = runs[-1].value
         row["ratio"] = round(row[PROBE_LABEL] / row["sf0.1"], 2)
         results[name] = row
         print(name, row, flush=True)
@@ -310,14 +312,16 @@ def main() -> None:
         )
         n_ratings = r.count()
         m = FunkSVD(n_factors=FUNK_K, lr=0.001, reg=0.001, epochs=FUNK_EPOCHS)
-        t0 = time.perf_counter()
-        m.fit(r, user_col="user_id", item_col="item_id", rating_col="rating")
-        total = time.perf_counter() - t0
+        t = timed(
+            spark,
+            f"probe:fit:{label}",
+            lambda: m.fit(r, user_col="user_id", item_col="item_id", rating_col="rating"),
+        )
         tail = m.epoch_times[1:]
         epoch_s = sum(tail) / len(tail)
         train[label] = {
             "n_ratings": n_ratings,
-            "fit_total_s": round(total, 3),
+            "fit_total_s": round(t.wall_s, 3),
             "epoch_s": round(epoch_s, 3),
             "ratings_per_s_per_epoch": round(n_ratings / epoch_s),
         }

@@ -63,38 +63,27 @@ def main() -> None:
 
     from dask_recommender_system_spark.registry import REGISTRY, load_all_operators
     from dask_recommender_system_spark.session import get_spark
-    from oracle_util import compare, duckdb_con
+    from oracle_util import check, duckdb_con
 
     load_all_operators()
     spark = get_spark("drs-sf3-knn-subset")
     con = duckdb_con(SF_DIR)
     results: dict[str, dict] = {}
 
-    def record(name: str, spark_pdf, oracle_sql: str, note: str) -> None:
-        oracle_pdf = con.sql(oracle_sql).df()
-        problems = compare(spark_pdf, oracle_pdf, name)
-        results[name] = {
-            "rows_match": len(spark_pdf) == len(oracle_pdf),
-            "schema_match": not any("columns" in p for p in problems),
-            "hash_match": not problems,
-            "spark_rows": len(spark_pdf),
-            "oracle_rows": len(oracle_pdf),
-            "err": "; ".join(problems) if problems else None,
-            "note": note,
-        }
-        print(f"{name}: {'PASS' if not problems else problems}", flush=True)
+    def record(name: str, run, oracle_sql: str, note: str) -> None:
+        rec = results[name] = {**check(run, con, name, oracle_sql), "note": note}
+        print(f"{name}: {'PASS' if rec['hash_match'] else rec['err']}", flush=True)
 
     # --- geo_grid_knn: full engine plan, subset compare -------------------
     q = REGISTRY["geo_grid_knn"]
     full = q.fn(spark, SF_DIR)
-    subset = full.filter(F.col("c_custkey") % GEO_SUB == 0).toPandas()
     oracle = q.oracle.replace(
         "FROM customer", f"FROM customer WHERE c_custkey % {GEO_SUB} = 0"
     )
     assert oracle != q.oracle
     record(
         "geo_grid_knn",
-        subset,
+        lambda: full.filter(F.col("c_custkey") % GEO_SUB == 0).toPandas(),
         oracle,
         f"sf3 bounded-subset oracle: engine ran the FULL registered plan; "
         f"compare restricted to c_custkey % {GEO_SUB} == 0 (oracle's "
@@ -110,14 +99,17 @@ def main() -> None:
     assert q.oracle.count(old_pat) == 1, q.oracle
     oracle = q.oracle.replace(old_pat, f"vec_id % {wide_mod} = 0")
     saved = similarity.KNN_QUERY_MOD
-    try:
-        similarity.KNN_QUERY_MOD = wide_mod
-        spark_pdf = q.fn(spark, SF_DIR).toPandas()
-    finally:
-        similarity.KNN_QUERY_MOD = saved
+
+    def widened():
+        try:
+            similarity.KNN_QUERY_MOD = wide_mod
+            return q.fn(spark, SF_DIR).toPandas()
+        finally:
+            similarity.KNN_QUERY_MOD = saved
+
     record(
         "knn_classifier_eval",
-        spark_pdf,
+        widened,
         oracle,
         f"sf3 bounded-subset oracle: leave-one-out eval with query mod "
         f"widened {saved} -> {wide_mod} on BOTH sides (full sf3 corpus, "
@@ -128,7 +120,6 @@ def main() -> None:
     # --- dedup_containment_sweep: full engine plan, subset compare --------
     q = REGISTRY["dedup_containment_sweep"]
     full = q.fn(spark, SF_DIR)
-    subset = full.filter(F.col("doc_a") % CONTAIN_SUB == 0).toPandas()
     anchor = "FROM idx a JOIN idx b ON a.s = b.s AND a.doc_id < b.doc_id"
     assert q.oracle.count(anchor) == 1, q.oracle
     oracle = q.oracle.replace(
@@ -136,7 +127,7 @@ def main() -> None:
     )
     record(
         "dedup_containment_sweep",
-        subset,
+        lambda: full.filter(F.col("doc_a") % CONTAIN_SUB == 0).toPandas(),
         oracle,
         f"sf3 bounded-subset oracle: engine ran the FULL registered plan; "
         f"compare restricted to doc_a % {CONTAIN_SUB} == 0 "
@@ -146,7 +137,6 @@ def main() -> None:
     # --- dedup_embedding_cosine: full engine plan, subset compare --------
     q = REGISTRY["dedup_embedding_cosine"]
     full = q.fn(spark, SF_DIR)
-    subset = full.filter(F.col("vec_a") % EMB_SUB == 0).toPandas()
     emb_anchor = "FROM e a JOIN e b ON a.vec_id < b.vec_id"
     assert q.oracle.count(emb_anchor) == 1, q.oracle
     oracle = q.oracle.replace(
@@ -154,7 +144,7 @@ def main() -> None:
     )
     record(
         "dedup_embedding_cosine",
-        subset,
+        lambda: full.filter(F.col("vec_a") % EMB_SUB == 0).toPandas(),
         oracle,
         f"sf3 bounded-subset oracle: engine ran the FULL registered plan "
         f"(exact-dup collapse + cell-pruned rep search); compare keeps "
@@ -166,7 +156,6 @@ def main() -> None:
     # --- item_cf_similarity: full engine plan, subset compare ------------
     q = REGISTRY["item_cf_similarity"]
     full = q.fn(spark, SF_DIR)
-    subset = full.filter(F.col("item") % ICF_SUB == 0).toPandas()
     join_anchor = "ON a.user_id = b.user_id AND a.item_id < b.item_id"
     assert q.oracle.count(join_anchor) == 1, q.oracle
     oracle = q.oracle.replace(
@@ -183,7 +172,7 @@ def main() -> None:
     )
     record(
         "item_cf_similarity",
-        subset,
+        lambda: full.filter(F.col("item") % ICF_SUB == 0).toPandas(),
         oracle,
         f"sf3 bounded-subset oracle: engine ran the FULL registered plan; "
         f"compare restricted to item % {ICF_SUB} == 0 — oracle pair join "
