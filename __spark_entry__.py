@@ -30,7 +30,7 @@ def entry(spark: SparkSession) -> DataFrame:
         fit_mllib_als,
         recommend_top_k,
     )
-    from dask_recommender_system_spark.models.queries import _ratings
+    from dask_recommender_system_spark.data import latest_ratings as _ratings
 
     from pyspark.sql import functions as F
 

@@ -17,7 +17,7 @@ exact for parquet); CSV/JSONL sources in ``sources/`` are schema-explicit
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 TABLES = (
@@ -99,13 +99,21 @@ def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
 # reintroduce one tie, visible in both engines identically.
 _TIE_MOD = 4_294_967_296  # 2^32
 
-# 60-bit md5 prefix as exact BIGINT digit arithmetic (same construction as
-# operators/dedup.py h60_sql — duplicated here because operators import
-# this module; 16^14 = 2^56 so every term and the sum stay exact).
+# Portable 60-bit string hash: the first 15 hex digits of md5, exact in
+# BIGINT on both engines. Defined here because the ratings derivation
+# hashes with it; operators/dedup.py re-exports it for the hash families.
 _H60_POWERS = [16 ** (14 - i) for i in range(15)]
 
 
-def _h60_duck(expr: str) -> str:
+def h60_spark(col) -> "F.Column":
+    """First 60 bits of md5(col) as a positive BIGINT (Spark side)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h60_sql(expr: str) -> str:
+    """The same 60-bit md5 value in DuckDB SQL — hex digits → BIGINT via
+    strpos arithmetic against literal powers of 16 (no float anywhere;
+    16^14 = 2^56 < 2^63 so every term and the sum stay exact)."""
     powers = ", ".join(str(p) for p in _H60_POWERS)
     return (
         "CAST(list_sum(list_transform(range(15), i -> "
@@ -114,7 +122,7 @@ def _h60_duck(expr: str) -> str:
     )
 
 
-_TIE_EXPR_DUCK = _h60_duck(
+_TIE_EXPR_DUCK = h60_sql(
     "CONCAT(l.l_partkey, '|', l.l_suppkey, '|', CAST(FLOOR(l.l_quantity) AS BIGINT))"
 )
 
@@ -147,50 +155,31 @@ def ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Manual escape hatch on top of the mechanical source hash below (e.g. a
-# semantics change that lives outside ratings_from_df's source text).
-_RATINGS_CACHE_VERSION = 1
-
-
-def _derivation_hash() -> str:
-    """Mechanical staleness key for the ratings derivation (ADVICE r07):
-    hash of ratings_from_df's SOURCE plus the tie-break constants it
-    closes over — an edit to the derivation self-invalidates every cache
-    without anyone remembering to bump _RATINGS_CACHE_VERSION."""
-    import hashlib
-    import inspect
-
-    src = inspect.getsource(ratings_from_df)
-    return hashlib.md5(
-        f"{_RATINGS_CACHE_VERSION}|{_TIE_MOD}|{src}".encode()
-    ).hexdigest()[:8]
-
-
-def _ratings_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the ratings view's inputs (lineitem+orders
-    listings: relative path + size + mtime_ns) plus the derivation hash —
-    the cache key for :func:`ratings_cached`, so regenerated testdata or a
-    changed derivation re-materializes instead of replaying stale rows."""
+def content_fingerprint(*paths: str) -> str:
+    """Content fingerprint of parquet sources: each path plus every file
+    under it as (relative path, size, mtime_ns). A staged copy or derived
+    view keyed on this — not on the path alone — re-materializes when a
+    dataset is regenerated at the same path instead of replaying stale
+    rows. Relative paths, not basenames: two layouts whose part files
+    share names in different subdirs must not collide."""
     import hashlib
     import os
 
-    h = hashlib.md5(f"v{_derivation_hash()}|{sf_dir}".encode())
-    for t in ("lineitem", "orders"):
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.isdir(p):
-            for root, _dirs, files in sorted(os.walk(p)):
-                for fn in sorted(files):
-                    # relative path, not basename: two layouts whose part
-                    # files share names but sit in different subdirs must
-                    # not collide (matches _stage_fingerprint's discipline
-                    # in streaming/windows.py)
-                    rel = os.path.relpath(os.path.join(root, fn), p)
-                    st = os.stat(os.path.join(root, fn))
-                    h.update(f"{rel}:{st.st_size}:{st.st_mtime_ns};".encode())
-        else:
-            st = os.stat(p)
-            h.update(f"{t}:{st.st_size}:{st.st_mtime_ns};".encode())
+    h = hashlib.md5()
+    for p in paths:
+        h.update(f"{p};".encode())
+        files = [p] if os.path.isfile(p) else [
+            os.path.join(root, fn) for root, _dirs, fns in os.walk(p) for fn in fns
+        ]
+        for f in sorted(files):
+            st = os.stat(f)
+            h.update(f"{os.path.relpath(f, p)}:{st.st_size}:{st.st_mtime_ns};".encode())
     return h.hexdigest()[:16]
+
+
+def _ratings_fingerprint(sf_dir: str) -> str:
+    """The ratings view's key: the fingerprint of its two inputs."""
+    return content_fingerprint(f"{sf_dir}/lineitem.parquet", f"{sf_dir}/orders.parquet")
 
 
 # Process-lifetime root for the materialized ratings view. A cross-run
@@ -217,16 +206,13 @@ def _cache_root() -> str:
     return _CACHE_ROOT
 
 
-def view_stage(sf_dir: str, name: str, version_src: str) -> str:
+def view_stage(sf_dir: str, name: str) -> str:
     """Stage path for a derived-view materialization under the
-    process-lifetime cache root: keyed by the view name, a hash of the
-    derivation SOURCE (so edits self-invalidate, like _derivation_hash),
-    and the dataset content fingerprint. Shared by ratings_cached and
-    operators/linalg.encoded_ratings."""
-    import hashlib
-
-    h = hashlib.md5(version_src.encode()).hexdigest()[:8]
-    return f"{_cache_root()}/{name}_{h}_{_ratings_fingerprint(sf_dir)}"
+    process-lifetime cache root, keyed by the view name and the dataset
+    content fingerprint. The root dies with the process, so the
+    derivation code cannot change under a live stage. Shared by
+    ratings_cached and operators/linalg.encoded_ratings."""
+    return f"{_cache_root()}/{name}_{_ratings_fingerprint(sf_dir)}"
 
 
 def ratings_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -244,10 +230,25 @@ def ratings_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet round-trips BIGINT/DOUBLE/DATE exactly."""
     import os
 
-    stage = f"{_cache_root()}/{_ratings_fingerprint(sf_dir)}"
+    stage = view_stage(sf_dir, "ratings")
     if not os.path.exists(f"{stage}/_SUCCESS"):
         ratings(spark, sf_dir).write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)
+
+
+def latest_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The reference's prep (run_als.py:9-10): the cached ratings view,
+    deduplicated to the latest rating per (user, item) — ts DESC, then
+    the unique interaction_id breaks ties."""
+    w = W.partitionBy("user_id", "item_id").orderBy(
+        F.col("ts").desc(), F.col("interaction_id").desc()
+    )
+    return (
+        ratings_cached(spark, sf_dir)
+        .withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") == 1)
+        .select("user_id", "item_id", "rating", "interaction_id")
+    )
 
 
 def ratings_from_df(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
@@ -256,22 +257,14 @@ def ratings_from_df(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
     ``RATINGS_SQL`` above (the oracles recompute it)."""
     l, o = lineitem.alias("l"), orders.alias("o")
     tie = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        F.col("l.l_partkey"),
-                        F.col("l.l_suppkey"),
-                        F.floor("l.l_quantity").cast("bigint"),
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long")
+        h60_spark(
+            F.concat_ws(
+                "|",
+                F.col("l.l_partkey"),
+                F.col("l.l_suppkey"),
+                F.floor("l.l_quantity").cast("bigint"),
+            )
+        )
         % _TIE_MOD
     )
     return (

@@ -23,7 +23,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import RATINGS_SQL
+from ..data import RATINGS_SQL, latest_ratings
 from ..registry import query
 from .als import ALS
 from .funk_svd import FunkSVD
@@ -31,23 +31,6 @@ from .mllib_als import fit_mllib_als, recommend_top_k
 
 FIT_EPOCHS = 3
 RECOMMEND_K = 5
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    r = ratings_cached(spark, sf_dir)
-    # reference prep pipeline: dedup keep-last then split (run_als.py:9-14)
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("user_id", "item_id").orderBy(
-        F.col("ts").desc(), F.col("interaction_id").desc()
-    )
-    return (
-        r.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "item_id", "rating", "interaction_id")
-    )
 
 
 # Per-epoch rows carry only TRUE invariants (finite metrics, MAE <= RMSE,
@@ -71,7 +54,7 @@ _FIT_METRICS_ORACLE = f"""
 
 
 def _fit_metrics_df(spark, sf_dir, model_cls, epochs=FIT_EPOCHS, k=4):
-    r = _ratings(spark, sf_dir)
+    r = latest_ratings(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7)
     test = r.filter(F.col("interaction_id") % 10 >= 7)
     # lr=0.001 is the reference's own published config AND the stability
@@ -183,7 +166,7 @@ def mllib_als_recommend(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-increasing in rank. The factor values themselves are
     non-SQL-expressible; entry() still serves the raw top-k rows as the
     flagship output."""
-    r = _ratings(spark, sf_dir).withColumns(
+    r = latest_ratings(spark, sf_dir).withColumns(
         {
             "user_id": F.col("user_id").cast("int"),
             "item_id": F.col("item_id").cast("int"),

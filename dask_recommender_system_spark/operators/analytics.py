@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table
-from ..models.common import tracked_checkpoint
+from ..models.common import block_offsets, tracked_checkpoint
 from ..registry import query
 from .relational import ORACLE_EPOCH, _utc
 
@@ -1579,42 +1579,23 @@ def pareto_frontier_2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     The textbook skyline is the oracle's O(n²) NOT-EXISTS self-join; the
     engine instead sorts ONE axis and takes a suffix-max of the other:
     dominated(a) ⟺ max{y : x > a.x} > a.y. That suffix max is a global
-    ordered scan, so it uses the SAME two-pass block-offset scheme as
-    `encode_sorted_rank` (models/common.py): range-partition by x desc +
-    checkpoint, per-partition suffix max via a _pid-keyed RANGE window
-    (rangeBetween to -1 ⟹ STRICT x dominators only, equal-x rows never
-    dominate each other), per-partition maxima collected (O(partitions),
-    cluster-sized) and prefix-combined exclusive, broadcast back. No
-    single-partition window; the largest task holds |items|/P rows.
-    Both measures are exact integers (unit quantities, revenue cents) —
-    no float ordering surface anywhere."""
+    ordered scan: a :func:`block_offsets` prefix max over x DESC, whose
+    in-block part is a RANGE window ending at -1 (STRICT x dominators
+    only, so equal-x rows never dominate each other); every earlier block
+    has strictly larger x. Both measures are exact integers (unit
+    quantities, revenue cents) — no float ordering surface anywhere."""
     li = load_table(spark, sf_dir, "lineitem")
     it = li.groupBy(F.col("l_partkey").alias("item_id")).agg(
         F.sum(F.floor("l_quantity").cast("long")).alias("x"),
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias("y"),
     )
-    p = spark.sparkContext.defaultParallelism
-    blocked = tracked_checkpoint(it.repartitionByRange(p, F.col("x").desc()))
-    tagged = blocked.withColumn("_pid", F.spark_partition_id())
-    # per-partition y-maxima in pid order (= descending x order), combined
-    # into an EXCLUSIVE prefix max: everything in earlier blocks has
-    # strictly larger x than anything in this block.
-    pmax = tagged.groupBy("_pid").agg(F.max("y").alias("m")).collect()
-    prefix, best = [], None
-    for row in sorted(pmax, key=lambda r: r["_pid"]):
-        prefix.append((row["_pid"], best))
-        best = row["m"] if best is None else max(best, row["m"])
-    pre_df = spark.createDataFrame(prefix, "_pid INT, _premax LONG")
-    w = (
-        W.partitionBy("_pid")
-        .orderBy(F.col("x").desc())
-        .rangeBetween(W.unboundedPreceding, -1)
+    blocks, w, _ = block_offsets(it, F.col("x").desc(), maxes=("y",))
+    local = blocks.withColumn(
+        "_lmax", F.max("y").over(w.rangeBetween(W.unboundedPreceding, -1))
     )
-    local = tagged.withColumn("_lmax", F.max("y").over(w))
-    thr = F.greatest(F.col("_lmax"), F.col("_premax"))
+    thr = F.greatest(F.col("_lmax"), F.col("_pre_y"))
     return (
-        local.join(F.broadcast(pre_df), "_pid")
-        .filter(thr.isNull() | (F.col("y") >= thr))
+        local.filter(thr.isNull() | (F.col("y") >= thr))
         .select("item_id", "x", "y")
     )
 
@@ -2028,48 +2009,32 @@ def abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC (Pareto) inventory classification: rank items by revenue,
     class A while cumulative share <= 80%, B <= 95%, else C — the
     workhorse of inventory/catalog prioritization. The global rank +
-    running revenue share reuse `vocab_coverage`'s two-pass block-offset
-    scheme verbatim (range partition desc, checkpoint, per-block
-    rank/cumsum, broadcast (row, mass) offsets) — no single-partition
-    window over the item table; revenue is integer CENTS so both the
-    cumsum and the class boundaries are exact integer comparisons."""
+    running revenue share are a :func:`block_offsets` scan ordered
+    (rev_cents DESC, item_id), like `vocab_coverage`; revenue is integer
+    CENTS so both the cumsum and the class boundaries are exact integer
+    comparisons."""
     li = load_table(spark, sf_dir, "lineitem")
     it = li.groupBy(F.col("l_partkey").alias("item_id")).agg(
         F.sum(F.round(F.col("l_extendedprice") * 100, 0).cast("long")).alias(
             "rev_cents"
         )
     )
-    p = spark.sparkContext.defaultParallelism
-    blocks = tracked_checkpoint(
-        it.repartitionByRange(p, F.col("rev_cents").desc(), F.col("item_id"))
+    blocks, lw, totals = block_offsets(
+        it, F.col("rev_cents").desc(), "item_id", sums=("rev_cents",)
     )
-    tagged = blocks.withColumn("_pid", F.spark_partition_id())
-    stats = tagged.groupBy("_pid").agg(
-        F.count("*").alias("_n"), F.sum("rev_cents").alias("_mass")
-    ).collect()
-    offs, row_acc, mass_acc = [], 0, 0
-    for row in sorted(stats, key=lambda r: r["_pid"]):
-        offs.append((row["_pid"], row_acc, mass_acc))
-        row_acc += row["_n"]
-        mass_acc += row["_mass"]
-    off_df = spark.createDataFrame(offs, "_pid INT, _row_off LONG, _mass_off LONG")
-    total = F.lit(mass_acc)
-    lw = W.partitionBy("_pid").orderBy(F.col("rev_cents").desc(), "item_id")
-    cum = F.col("_mass_off") + F.sum("rev_cents").over(
+    total = F.lit(totals["_off_rev_cents"])
+    cum = F.col("_off_rev_cents") + F.sum("rev_cents").over(
         lw.rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    return (
-        tagged.join(F.broadcast(off_df), "_pid")
-        .select(
-            "item_id",
-            "rev_cents",
-            (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
-            F.round(cum.cast("double") / total, 6).alias("cum_share"),
-            F.when(cum * 100 <= ABC_A_PCT * total, "A")
-            .when(cum * 100 <= ABC_B_PCT * total, "B")
-            .otherwise("C")
-            .alias("abc_class"),
-        )
+    return blocks.select(
+        "item_id",
+        "rev_cents",
+        (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
+        F.round(cum.cast("double") / total, 6).alias("cum_share"),
+        F.when(cum * 100 <= ABC_A_PCT * total, "A")
+        .when(cum * 100 <= ABC_B_PCT * total, "B")
+        .otherwise("C")
+        .alias("abc_class"),
     )
 
 
@@ -3249,16 +3214,14 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank fraction). Entirely INTEGER arithmetic: rank targets are
     ceil(r·N/n_g) = (r·N + n_g − 1) DIV n_g and values stay exact cents —
     zero float surface. Physical design has the two classic 100 TB traps
-    and dodges both: (a) the GLOBAL cumulative distribution is built with
-    the two-pass block-offset scheme (range-partition the value
-    histogram, per-block cumsum under a _pid-keyed window, O(P)-row
-    offset collect — never a single-partition ORDER BY window); (b) the
+    and dodges both: (a) the GLOBAL cumulative distribution is a
+    :func:`block_offsets` running sum over the value histogram — never a
+    single-partition ORDER BY window; (b) the
     rank→value lookup is an interval join (positions tile [1..N]
     disjointly) executed as a bucketized EQUI join: each global interval
     explodes to its ⌈span/W⌉ buckets (amortized N/W + |values| rows), the
     probe hashes to one bucket. Output is histogram-compressed (one row
     per distinct (group, value))."""
-    p = spark.sparkContext.defaultParallelism
     src = load_table(spark, sf_dir, "customer").select(
         F.col("c_nationkey").alias("grp"),
         F.round(F.col("c_acctbal") * 100).cast("long").alias("cents"),
@@ -3272,24 +3235,12 @@ def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(W.partitionBy("grp")).alias("ng"),
     )
     h = src.groupBy("cents").agg(F.count("*").alias("c"))
-    blocked = tracked_checkpoint(h.repartitionByRange(p, "cents"))
-    tagged = blocked.withColumn("_pid", F.spark_partition_id())
-    totals = tagged.groupBy("_pid").agg(F.sum("c").alias("s")).collect()
-    offsets, acc = [], 0
-    for row in sorted(totals, key=lambda x: x["_pid"]):
-        offsets.append((row["_pid"], acc))
-        acc += row["s"]
-    n_total = acc
-    off_df = spark.createDataFrame(offsets, "_pid INT, _off LONG")
-    wl = W.partitionBy("_pid").orderBy("cents")
-    g = (
-        tagged.withColumn("_lcum", F.sum("c").over(wl))
-        .join(F.broadcast(off_df), "_pid")
-        .select(
-            F.col("cents").alias("gval"),
-            (F.col("_off") + F.col("_lcum")).alias("hi"),
-            (F.col("_off") + F.col("_lcum") - F.col("c") + 1).alias("lo"),
-        )
+    blocks, wl, totals = block_offsets(h, "cents", sums=("c",))
+    n_total = totals["_off_c"]
+    g = blocks.withColumn("_lcum", F.sum("c").over(wl)).select(
+        F.col("cents").alias("gval"),
+        (F.col("_off_c") + F.col("_lcum")).alias("hi"),
+        (F.col("_off_c") + F.col("_lcum") - F.col("c") + 1).alias("lo"),
     )
     # bucketized interval join: W_B positions per bucket
     wb = max(1, n_total // 512)
@@ -6450,8 +6401,8 @@ def event_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     numbers are near-dense, the scan decomposes into contiguous VALUE
     blocks (block = aseq DIV {LATE_BLOCK}): a block-keyed running max + an
     EXCLUSIVE prefix max over the bounded block table, combined with
-    GREATEST — the two-pass block-offset scheme (encode_sorted_rank's
-    discipline) applied to a prefix MAX instead of a rank. All
+    GREATEST — block_offsets' prefix max, keyed on value buckets over a
+    bounded bucket table instead of collected range blocks. All
     quantities are integer epoch seconds; the log2 bucket is the
     binary-string length (no libm). The DuckDB oracle runs the naive
     global window — hash equality proves the block decomposition."""

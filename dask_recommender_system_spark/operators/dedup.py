@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import load_table, spread
+from ..data import h60_spark, h60_sql, load_table, spread
 from ..registry import query
 
 SHINGLE_N = 3
@@ -128,7 +128,6 @@ MINHASH_BANDS = 8  # single-row bands for candidates: P(cand) = 1-(1-s)^8
 # both engines; permutations run in a 31-bit Mersenne field so a·x+b stays
 # < 2^62 (no overflow, no HUGEINT/decimal promotion on either side).
 H60_P = 2147483647  # 2^31 - 1
-_H60_POWERS = [16 ** (14 - i) for i in range(15)]
 # fixed draws from random.Random(20260814) — regenerating them is a
 # correctness change (every committed signature/band value moves)
 MINHASH_A = [
@@ -157,23 +156,6 @@ MINHASH_B = [
     46258261, 1389849858, 1905916930, 599288704, 1849850184, 484960482,
     2018272176, 1849562618, 742836724, 1300078765,
 ]
-
-
-def h60_spark(col) -> "F.Column":
-    """First 60 bits of md5(col) as a positive BIGINT (Spark side)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def h60_sql(expr: str) -> str:
-    """The same 60-bit md5 value in DuckDB SQL — hex digits → BIGINT via
-    strpos arithmetic against literal powers of 16 (no float anywhere;
-    16^14 = 2^56 < 2^63 so every term and the sum stay exact)."""
-    powers = ", ".join(str(p) for p in _H60_POWERS)
-    return (
-        "CAST(list_sum(list_transform(range(15), i -> "
-        f"(strpos('0123456789abcdef', substr(md5({expr}), CAST(i + 1 AS INT), 1)) - 1)"
-        f" * [{powers}][i + 1])) AS BIGINT)"
-    )
 
 
 def minhash_signatures(docs: DataFrame) -> DataFrame:
@@ -1241,7 +1223,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalized text prefix), and candidates are pairs within
     {SNM_WINDOW} sort RANKS — O(n·w) candidates regardless of how skewed
     any blocking key would be, SNM's defining advantage. The global rank
-    comes from the `encode_sorted_rank` two-pass block scheme (no
+    comes from `encode_sorted_rank` (a block-offset rank scan, no
     single-partition window); rank adjacency becomes an EQUI join on
     rank buckets (each row lands in 2 buckets, pairs dedup'd) and
     survivors go through the SAME `exact_jaccard_on_pairs` verify as the

@@ -27,18 +27,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
 
 TE_SMOOTHING = 10  # pseudo-count m in (sum + m*mu) / (n + m)
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 @query(
@@ -63,7 +55,7 @@ def target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a 1-row global-mean broadcast: the output is the |items| encoding
     table a feature join consumes — rare items sit near mu, popular
     items near their own mean, and no category ever produces a NaN."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     mu = r.agg(F.avg("rating").alias("mu"))
     return (
         r.crossJoin(F.broadcast(mu))
@@ -162,7 +154,7 @@ def split_next_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost is one keyed shuffle regardless of scale. Deterministic
     tiebreak on interaction_id keeps the split stable across runs and
     engines."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     # item_id closes the order: planted duplicate interaction_ids can
     # share ts with a different item, which would make rn=1 ambiguous
     w = W.partitionBy("user_id").orderBy(

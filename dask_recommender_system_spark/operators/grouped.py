@@ -17,18 +17,10 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..data import load_table, spread
+from ..data import load_table, ratings_cached, spread
 from ..registry import query
 
 EWMA_ALPHA = 0.3
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 EWMA_SCHEMA = T.StructType(
@@ -113,7 +105,7 @@ def user_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form — see _EWMA_ORACLE. Python-replica-tested in
     tests/test_properties.py."""
     r = (
-        _ratings(spark, sf_dir)
+        ratings_cached(spark, sf_dir)
         .filter(F.col("user_id") % 100 == 0)
         .dropDuplicates()  # testdata carries exact dup rows (D1); a defined
         # sequence needs one row per interaction
@@ -206,7 +198,7 @@ def cogroup_user_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar pandas_udf, GROUPED_MAP, mapInPandas, cogroup,
     applyInPandasWithState. Inner-join semantics (users active on both
     sides) keep the output null-free for canonical hashing."""
-    r = _ratings(spark, sf_dir).select("user_id")
+    r = ratings_cached(spark, sf_dir).select("user_id")
     ev = load_table(spark, sf_dir, "events").select("user_id")
 
     def align(key: tuple, r_pdf: pd.DataFrame, e_pdf: pd.DataFrame) -> pd.DataFrame:

@@ -17,22 +17,14 @@ for the declared queries come from integer arithmetic on the id, not an RNG
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, latest_ratings, load_table
 from ..models.common import encode_sorted_rank
 from ..registry import query
 
 K = 4  # factor rank used by the declared linalg queries (models use their own)
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 ENCODED_SQL = f"""
@@ -55,15 +47,7 @@ def _encoded_live(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The live derivation behind :func:`encoded_ratings`: dedup-keep-last
     (D2) then dense-encode (A2/J1) — the reference's pipeline order
     (run_als.py:9-11 → models/als.py:26-32)."""
-    r = _ratings(spark, sf_dir)
-    w = W.partitionBy("user_id", "item_id").orderBy(
-        F.col("ts").desc(), F.col("interaction_id").desc()
-    )
-    r = (
-        r.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "item_id", "rating", "interaction_id")
-    )
+    r = latest_ratings(spark, sf_dir)
     ue = encode_sorted_rank(r.select("user_id"), "user_id", "u_idx")
     ie = encode_sorted_rank(r.select("item_id"), "item_id", "i_idx")
     # no broadcast() hint: user/item dims are broadcastable at sf0.1 but not
@@ -84,19 +68,14 @@ def encoded_ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorted-rank encodes, several seconds of identical prep per bench
     query). The derivation is deterministic (sorted-rank encode, unique
     interaction_id tiebreak) and the columns are BIGINT/DOUBLE, so the
-    parquet round-trip is value-exact; the stage key hashes the
-    derivation source + dataset content, and the cache root dies with
-    the process (no cross-run reuse)."""
-    import inspect
+    parquet round-trip is value-exact; the stage is keyed on dataset
+    content, and the cache root dies with the process (no cross-run
+    reuse)."""
     import os
 
     from ..data import view_stage
 
-    stage = view_stage(
-        sf_dir,
-        "encoded",
-        inspect.getsource(_encoded_live) + inspect.getsource(encode_sorted_rank),
-    )
+    stage = view_stage(sf_dir, "encoded")
     if not os.path.exists(f"{stage}/_SUCCESS"):
         _encoded_live(spark, sf_dir).write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)

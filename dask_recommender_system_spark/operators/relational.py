@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..models.common import encode_sorted_rank
 from ..registry import query
 
@@ -35,14 +35,6 @@ def _utc(spark: SparkSession) -> None:
 
 def _epoch(col: str) -> F.Column:
     return F.unix_timestamp(F.col(col))
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -590,7 +582,7 @@ def dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     within partitions — no global sort at 100 TB. interaction_id breaks
     timestamp ties deterministically."""
     _utc(spark)
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     w = W.partitionBy("user_id", "item_id").orderBy(
         F.col("ts").desc(), F.col("interaction_id").desc()
     )
@@ -647,7 +639,7 @@ def split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     reproduce the exact rows; the hash split is also *stable under
     repartitioning*, which randomSplit is not — at 100 TB that stability is
     what you want anyway. The test complement is `join_anti_split` (J3)."""
-    return _ratings(spark, sf_dir).filter(F.col("interaction_id") % 10 < 7).select(
+    return ratings_cached(spark, sf_dir).filter(F.col("interaction_id") % 10 < 7).select(
         "user_id", "item_id", "rating", "interaction_id"
     )
 
@@ -673,7 +665,7 @@ def split_train_test_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     no second scan ordering, and the labeling filter is narrow. At 100 TB
     swap ``percentile`` for ``approx_percentile`` (t-digest, mergeable)
     and the shape is unchanged."""
-    r = _ratings(spark, sf_dir).select("interaction_id", _epoch("ts").alias("t"))
+    r = ratings_cached(spark, sf_dir).select("interaction_id", _epoch("ts").alias("t"))
     cutoff = r.agg(F.expr("percentile(t, 0.8)").alias("cutoff"))
     return r.crossJoin(F.broadcast(cutoff)).select(
         "interaction_id",
@@ -736,7 +728,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratings every user/item appears before the 0.8 cutoff, so the cold
     counts are legitimately 0 here; tests/test_properties.py drives
     `leakage_audit_from` with a planted split where every branch fires.)"""
-    r = _ratings(spark, sf_dir).select("user_id", "item_id", _epoch("ts").alias("t"))
+    r = ratings_cached(spark, sf_dir).select("user_id", "item_id", _epoch("ts").alias("t"))
     return leakage_audit_from(r)
 
 
@@ -820,7 +812,7 @@ def split_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     recompute beats a fold you must persist. One grouped aggregate; the
     two COUNT(DISTINCT)s compile to a single Expand + two-level aggregate,
     not two jobs."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     return (
         r.groupBy((F.col("interaction_id") % K_FOLDS).cast("long").alias("fold"))
         .agg(
@@ -846,7 +838,7 @@ def distinct_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df[user_col].unique()``). Partial (map-side) distinct before the
     shuffle keeps the exchange proportional to key cardinality, not row
     count."""
-    return _ratings(spark, sf_dir).select("user_id").distinct()
+    return ratings_cached(spark, sf_dir).select("user_id").distinct()
 
 
 ENCODE_USERS_SQL = f"""
@@ -861,14 +853,12 @@ ENCODE_USERS_SQL = f"""
 @query("encode_ids", oracle=ENCODE_USERS_SQL)
 def encode_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2: dictionary-encode ids to dense 0..n-1 ints (reference
-    models/als.py:29-32 ``{x: i for i, x in enumerate(ids)}``). Uses the
-    two-pass block-offset encoder (models/common.encode_sorted_rank):
-    range-partition the distinct keys, rank within each partition, add
-    cumulative block offsets — bit-identical to ROW_NUMBER() OVER (ORDER BY
-    user_id) - 1 (so the oracle holds) with no single-partition window, the
-    shape that survives 10⁹-key dimensions."""
+    models/als.py:29-32 ``{x: i for i, x in enumerate(ids)}``) with
+    models/common.encode_sorted_rank — bit-identical to ROW_NUMBER() OVER
+    (ORDER BY user_id) - 1, so the oracle holds, with no single-partition
+    window."""
     return encode_sorted_rank(
-        _ratings(spark, sf_dir).select("user_id"), "user_id", "u_idx"
+        ratings_cached(spark, sf_dir).select("user_id"), "user_id", "u_idx"
     )
 
 
@@ -886,7 +876,7 @@ def count_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3: corpus cardinalities (reference models/als.py:35-37). One job,
     one row out; the two countDistincts expand then partially aggregate —
     Catalyst plans this as expand + two-phase hash aggregate."""
-    return _ratings(spark, sf_dir).agg(
+    return ratings_cached(spark, sf_dir).agg(
         F.count("*").alias("n_ratings"),
         F.countDistinct("user_id").alias("n_users"),
         F.countDistinct("item_id").alias("n_items"),
@@ -907,7 +897,7 @@ def global_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: global min/max/mean rating (reference models/als.py:39-41) — the
     μ term of the model plus the clip bounds. Scalar stats are the only
     values this engine ever collects to the driver (SURVEY.md §7.4)."""
-    return _ratings(spark, sf_dir).agg(
+    return ratings_cached(spark, sf_dir).agg(
         F.min("rating").cast("double").alias("min_rating"),
         F.max("rating").cast("double").alias("max_rating"),
         F.round(F.avg("rating"), 6).alias("mean_rating"),
@@ -929,7 +919,7 @@ def grouped_sum_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     SURVEY.md §1.4: groupBy over observed rows only; map-side partial sums
     shrink the shuffle to one row per (partition, user)."""
     return (
-        _ratings(spark, sf_dir)
+        ratings_cached(spark, sf_dir)
         .groupBy("user_id")
         .agg(F.round(F.sum("rating"), 6).alias("sum_rating"), F.count("*").alias("n"))
     )
@@ -947,7 +937,7 @@ def grouped_sum_user(spark: SparkSession, sf_dir: str) -> DataFrame:
 def grouped_sum_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: per-item axis sum (reference models/als.py:172, axis=0)."""
     return (
-        _ratings(spark, sf_dir)
+        ratings_cached(spark, sf_dir)
         .groupBy("item_id")
         .agg(F.round(F.sum("rating"), 6).alias("sum_rating"), F.count("*").alias("n"))
     )
@@ -970,7 +960,7 @@ def eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines difference against the identical constant. One pass, one
     row; the reference's driver-side numpy reduction becomes a two-phase
     hash aggregate."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     mu = r.agg(F.round(F.avg("rating"), 6).alias("mu"))
     err = F.col("rating") - F.col("mu")
     return r.crossJoin(F.broadcast(mu)).agg(
@@ -1029,7 +1019,7 @@ def join_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Series.map(dict)``) as two broadcast hash equi-joins. The dict that
     lived in driver memory becomes a broadcast dimension table — the join
     never shuffles the fact side, which is the 100 TB-safe shape."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     ue = encode_ids(spark, sf_dir)
     ie = encode_sorted_rank(r.select("item_id"), "item_id", "i_idx")
     # broadcast is right while dims fit the threshold; past that (10⁹-row
@@ -1122,7 +1112,7 @@ def join_anti_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``df.drop(train.index)`` — index subtraction is relationally an
     anti-join). Pins Spark's semi/anti capability; at scale this is a
     shuffled hash anti-join on the row key."""
-    r = _ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7).select("interaction_id")
     return r.join(train, "interaction_id", "left_anti").select(
         "user_id", "item_id", "rating", "interaction_id"
@@ -1235,7 +1225,7 @@ def merge_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge key — the same cost as the dedup_keep_last it generalizes — and
     no join-skew surface. Base/delta/op assignments are deterministic
     interaction_id splits so both engines see identical inputs."""
-    r = _ratings(spark, sf_dir).withColumn("t", F.unix_timestamp("ts"))
+    r = ratings_cached(spark, sf_dir).withColumn("t", F.unix_timestamp("ts"))
     base = r.filter(F.col("interaction_id") % 10 < 8).select(
         "user_id", "item_id", "rating", "t", "interaction_id",
         F.lit(0).alias("pri"), F.lit("K").alias("op"),

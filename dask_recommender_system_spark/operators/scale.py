@@ -17,20 +17,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
 
 N_SALTS = 8
 
 IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
-
-
-def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..data import ratings_cached
-
-    # derive-once materialized view (SCALE.md): values identical to the
-    # live ratings_from_df derivation, minus the md5-per-row view prep
-    return ratings_cached(spark, sf_dir)
 
 
 @query(
@@ -54,7 +46,7 @@ def join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the manual fallback when AQE's skew splitting can't help —
     e.g. a skewed *aggregation* key or a non-shuffle-joinable build side;
     S scales with observed skew (p99 key count / median)."""
-    r = _ratings(spark, sf_dir).withColumn(
+    r = ratings_cached(spark, sf_dir).withColumn(
         "salt", (F.col("interaction_id") % N_SALTS).cast("int")
     )
     p = load_table(spark, sf_dir, "part").select(
@@ -274,7 +266,7 @@ def heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (see module comment for the superset guarantee)."""
     import pandas as pd
 
-    r = _ratings(spark, sf_dir).select(F.expr(_HH_SKEW).alias("key"))
+    r = ratings_cached(spark, sf_dir).select(F.expr(_HH_SKEW).alias("key"))
 
     def mg(batches):
         counters: dict[int, int] = {}

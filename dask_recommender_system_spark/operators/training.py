@@ -7,7 +7,8 @@ consumes observed triples only); these are the ops a team turns that same
 matrix into model-ready training data with — implicit-feedback negatives,
 bucketed categorical features, and a token vocabulary — each expressed in
 the shapes that survive 100 TB: keyed shuffles, broadcast scalars, and the
-two-pass block-offset scheme instead of any single-partition window.
+block-offset scan (models/common.block_offsets) instead of any
+single-partition window.
 """
 
 from __future__ import annotations
@@ -224,18 +225,12 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-vocab while the mass before it is under VOCAB_MASS_PCT% (the
     frequency-cutoff step of BPE/WordPiece vocab induction).
 
-    The global rank + running mass are computed WITHOUT a single-partition
-    window, via the same two-pass block-offset scheme as the id encoder
-    (models/common.py encode_sorted_rank): range-partition the |vocab|-row
-    frequency table on (freq DESC, term), pin blocks with an eager
-    localCheckpoint, rank/cumsum each block locally under a
-    partition-id-keyed window, then add broadcast per-block (row, mass)
-    offsets from one O(num_partitions)-row collect. Bit-identical to
-    ``ROW_NUMBER()/SUM() OVER (ORDER BY freq DESC, term)`` — the DuckDB
-    oracle IS that query — while the largest single task holds
-    |vocab|/num_parts tokens instead of all of them. The heavy corpus
-    scan collapses to |vocab| rows in the keyed frequency agg first; at
-    open-web scale add a min-frequency prefilter before ranking
+    The global rank + running mass are a :func:`block_offsets` scan over
+    the |vocab|-row frequency table ordered (freq DESC, term) —
+    bit-identical to ``ROW_NUMBER()/SUM() OVER (ORDER BY freq DESC,
+    term)``, the DuckDB oracle, with no single-partition window. The heavy
+    corpus scan collapses to |vocab| rows in the keyed frequency agg
+    first; at open-web scale add a min-frequency prefilter before ranking
     (SCALE.md)."""
     d = load_table(spark, sf_dir, "documents").filter(
         F.length(F.trim(F.col("text"))) > 0
@@ -246,39 +241,25 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("term")
         .agg(F.count("*").alias("freq"))
     )
-    spark_ = spark
-    p = spark_.sparkContext.defaultParallelism
-    from ..models.common import tracked_checkpoint
+    # imported here: the models package costs set-up time for every
+    # workload that loads this module and never ranks a vocabulary
+    from ..models.common import block_offsets
 
-    blocks = tracked_checkpoint(
-        f.repartitionByRange(p, F.col("freq").desc(), F.col("term"))
+    blocks, lw, totals = block_offsets(
+        f, F.col("freq").desc(), "term", sums=("freq",)
     )
-    tagged = blocks.withColumn("_pid", F.spark_partition_id())
-    stats = tagged.groupBy("_pid").agg(
-        F.count("*").alias("_n"), F.sum("freq").alias("_mass")
-    ).collect()
-    offs, row_acc, mass_acc = [], 0, 0
-    for row in sorted(stats, key=lambda r: r["_pid"]):
-        offs.append((row["_pid"], row_acc, mass_acc))
-        row_acc += row["_n"]
-        mass_acc += row["_mass"]
-    off_df = spark_.createDataFrame(offs, "_pid INT, _row_off LONG, _mass_off LONG")
-    total = F.lit(mass_acc)
-    lw = W.partitionBy("_pid").orderBy(F.col("freq").desc(), "term")
-    cum = F.col("_mass_off") + F.sum("freq").over(
+    total = F.lit(totals["_off_freq"])
+    cum = F.col("_off_freq") + F.sum("freq").over(
         lw.rowsBetween(W.unboundedPreceding, W.currentRow)
     )
-    return (
-        tagged.join(F.broadcast(off_df), "_pid")
-        .select(
-            "term",
-            "freq",
-            (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
-            F.round(cum.cast("double") / total, 6).alias("cum_share"),
-            ((cum - F.col("freq")) * 100 < VOCAB_MASS_PCT * total)
-            .cast("long")
-            .alias("in_vocab"),
-        )
+    return blocks.select(
+        "term",
+        "freq",
+        (F.col("_row_off") + F.row_number().over(lw)).cast("long").alias("rnk"),
+        F.round(cum.cast("double") / total, 6).alias("cum_share"),
+        ((cum - F.col("freq")) * 100 < VOCAB_MASS_PCT * total)
+        .cast("long")
+        .alias("in_vocab"),
     )
 
 

@@ -11,17 +11,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from ..data import RATINGS_SQL, load_table
+from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
 from .relational import ORACLE_EPOCH, _utc
-
-def _ratings_view(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Derive-once materialized ratings view (SCALE.md): value-identical
-    to the live ratings_from_df derivation, minus the md5-per-row prep."""
-    from ..data import ratings_cached
-
-    return ratings_cached(spark, sf_dir)
-
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
 
@@ -331,7 +323,7 @@ def item_cf_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-count is then one keyed hash aggregate, degree normalization two
     small joins, and the per-item top-k a keyed ranking window. Every
     stage keyed, nothing global."""
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     dedup = r.groupBy("user_id", "item_id").agg(
         F.max(F.unix_timestamp("ts")).alias("t"),
         F.max("interaction_id").alias("tie"),
@@ -558,7 +550,7 @@ def window_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum, all over ONE window partitioning — Spark plans a single sort +
     WindowExec, one shuffle on user_id. interaction_id is the unique
     tiebreak (FIXTURES.md determinism rule)."""
-    r = _ratings_view(spark, sf_dir).filter(F.col("user_id") % 50 == 0)
+    r = ratings_cached(spark, sf_dir).filter(F.col("user_id") % 50 == 0)
     ord_w = W.partitionBy("user_id").orderBy("interaction_id")
     run_w = ord_w.rowsBetween(W.unboundedPreceding, W.currentRow)
     return r.select(
@@ -647,7 +639,7 @@ def agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rsd), which the oracle CAN compute — promoting this from rows-only
     to a full value-checked verdict. The exact countDistinct branch exists
     only for this verification; production use emits the estimate alone."""
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     agged = r.groupBy((F.col("user_id") % 10).alias("bucket")).agg(
         F.approx_count_distinct("item_id", APPROX_DISTINCT_RSD).alias("ai"),
         F.approx_count_distinct("user_id", APPROX_DISTINCT_RSD).alias("au"),
@@ -854,7 +846,7 @@ def markov_next_item(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by interactions, not catalog² — then a cur_item-keyed total
     + top-k ranking window. Nothing global; the bigram table is the
     model, ready for a broadcast-join serving lookup."""
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     # item_id closes the order: the generator plants duplicate
     # interaction_ids (dedup fixtures), and 8 of them share ts with a
     # different item — without the third key the lag order is ambiguous
@@ -931,7 +923,7 @@ def recommendation_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines audit the same lists); adds one item-keyed popularity agg, a
     1-row percentile-cut broadcast, and a single reduce."""
     recs = recommend_top_k(spark, sf_dir)
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     pop = r.groupBy("item_id").agg(F.count("*").alias("cnt"))
     cut = pop.agg(
         F.round(F.expr(f"percentile(cnt, {HEAD_PCTL})"), 6).alias("head_cut"),
@@ -1973,7 +1965,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast), then per pick one user-keyed anti-join + brand
     semi-flag + user-keyed argmax window over ≤{MMR_POOL} rows/user —
     bounded work per user independent of catalog size."""
-    r = _ratings_view(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7).persist()
     mu = train.agg(F.round(F.avg("rating"), 6).alias("mu"))
     ub = (
@@ -2484,10 +2476,9 @@ def team_draft_interleaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     list-for-list. At 100 TB the only data-sized work is the two
     ranker rollups; the draft itself is O({TD_L}) on one row."""
     from .relational import _utc
-    from ..data import ratings as load_ratings
 
     _utc(spark)
-    r = load_ratings(spark, sf_dir)
+    r = ratings_cached(spark, sf_dir)
     pop = (
         r.groupBy("item_id")
         .agg(F.count("*").cast("long").alias("sc"))

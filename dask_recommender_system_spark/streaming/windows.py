@@ -66,24 +66,6 @@ def _stream_src_path(src: str, leaf: str) -> str:
     return stage
 
 
-def _stage_fingerprint(src: str) -> str:
-    """Content fingerprint of a parquet source: the path plus every
-    listed file's (relative name, size, mtime_ns). Keying a staged copy
-    on this — not on the path alone — means a regenerated dataset at the
-    same path re-stages instead of silently replaying stale rows
-    (ADVICE r06; the old symlink staging tracked live content for free,
-    a materialized sorted copy must earn it)."""
-    import hashlib
-
-    h = hashlib.md5(src.encode())
-    for root, _dirs, files in sorted(os.walk(src)):
-        rel = os.path.relpath(root, src)
-        for fn in sorted(files):
-            st = os.stat(os.path.join(root, fn))
-            h.update(f"{rel}/{fn}:{st.st_size}:{st.st_mtime_ns};".encode())
-    return h.hexdigest()[:16]
-
-
 def _staged_sorted_copy(spark: SparkSession, src: str, sort_cols: list[str]) -> str:
     """Stage a directory-shaped parquet source as RANGE-SHARDED
     sort_cols-sorted files the file source consumes in global order —
@@ -112,7 +94,9 @@ def _staged_sorted_copy(spark: SparkSession, src: str, sort_cols: list[str]) -> 
     import shutil
     import uuid as _uuid
 
-    stage = f"{_stream_stage_root()}/{_stage_fingerprint(src)}_sorted"
+    from ..data import content_fingerprint
+
+    stage = f"{_stream_stage_root()}/{content_fingerprint(src)}_sorted"
     if not os.path.exists(f"{stage}/_SUCCESS"):
         src_bytes = 0
         for root, _dirs, files in os.walk(src):

@@ -1,7 +1,7 @@
 """Static gate: catches name and import breakage before any Spark test runs.
 
 Stdlib only, no SparkSession; the file name sorts first under
-``pytest tests/``. Four checks over every module of the package and every
+``pytest tests/``. Five checks over every module of the package and every
 harness script (``bench.py``, ``correctness_local.py``,
 ``__spark_entry__.py``, ``tools/*.py``, loaded by path, since no test
 imports them):
@@ -14,7 +14,9 @@ imports them):
 3. every ``from X import Y`` in the source, function-local ones included,
    resolves;
 4. every call ``f(...)`` whose bare name ``f`` resolves to a package,
-   harness or ``oracle_util`` function binds against ``inspect.signature(f)``.
+   harness or ``oracle_util`` function binds against ``inspect.signature(f)``;
+5. ``spark_partition_id`` appears in the package only inside
+   ``models.common.block_offsets``.
 
 pyflakes and ruff would cover 2 and 3, but neither is a dependency here.
 """
@@ -283,3 +285,33 @@ def test_no_operator_calls_a_query_through_the_registry():
         and isinstance(node.func.value, ast.Subscript)
     ]
     assert not bad, "REGISTRY[...].fn(...) inside the package:\n" + "\n".join(bad)
+
+
+def test_spark_partition_id_only_in_block_offsets():
+    """The block-offset scan (range blocks tagged with
+    ``spark_partition_id``, per-block offsets collected and broadcast
+    back) has one home, ``models.common.block_offsets``; any other use is
+    a hand copy of it. Counts code and SQL strings, not comments."""
+    home = "dask_recommender_system_spark.models.common"
+    bad = []
+    for name, (_, _, tree, _) in MODULES.items():
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if name == home and isinstance(fn, ast.FunctionDef) and fn.name == "block_offsets"
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            uses = (
+                (isinstance(node, ast.Attribute) and node.attr == "spark_partition_id")
+                or (isinstance(node, ast.Name) and node.id == "spark_partition_id")
+                or (isinstance(node, ast.alias) and node.name == "spark_partition_id")
+                or (
+                    isinstance(node, ast.Constant)
+                    and isinstance(node.value, str)
+                    and "spark_partition_id(" in node.value.lower()
+                )
+            )
+            if uses and id(node) not in allowed:
+                bad.append(f"{name}:{node.lineno}")
+    assert not bad, "spark_partition_id outside block_offsets:\n" + "\n".join(bad)

@@ -4,6 +4,7 @@ checks for the hash-based dedup family on constructed corpora."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -755,6 +756,54 @@ def test_exact_quantiles_cont_matches_builtin_percentile(spark):
     ).first()
     for i, q in enumerate(qs):
         assert got[q] == want_row[f"q{i}"], (q, got[q], want_row[f"q{i}"])
+
+
+@pytest.mark.parametrize("desc", [False, True])
+def test_block_offsets_equals_one_global_window(spark, desc):
+    """block_offsets' rank, running sum and exclusive prefix max equal
+    ROW_NUMBER(), SUM() and MAX() over one plain global window — with
+    ties in the order key and more range blocks than distinct keys, so
+    some blocks hold no rows. Ties keep every comparison deterministic:
+    the sum and max frames are RANGE frames (peers included / excluded
+    together), and tied rows' row numbers are compared as a multiset."""
+    from dask_recommender_system_spark.models.common import (
+        QUERY_CHECKPOINTS,
+        block_offsets,
+    )
+
+    keys = [5, 2, 5, 9, 2, 5, 9, 9, 2, 5, 7, 7] * 3
+    rows = [(i, k, (i * 37) % 23 - 11) for i, k in enumerate(keys)]
+    df = spark.createDataFrame(rows, "id LONG, k LONG, c LONG")
+    order = F.col("k").desc() if desc else F.col("k")
+
+    blocks, w, totals = block_offsets(df, order, sums=("c",), maxes=("c",), num_parts=8)
+    pinned = QUERY_CHECKPOINTS[-1]
+    n_blocks = blocks.select("_pid").distinct().count()
+    assert pinned.rdd.getNumPartitions() > n_blocks  # some blocks are empty
+    before = w.rangeBetween(W.unboundedPreceding, -1)
+    got = blocks.select(
+        "id",
+        "k",
+        (F.col("_row_off") + F.row_number().over(w)).alias("rn"),
+        (F.col("_off_c") + F.sum("c").over(w)).alias("cum"),
+        F.greatest(F.col("_pre_c"), F.max("c").over(before)).alias("pre"),
+    ).collect()
+
+    g = W.orderBy(order)
+    want = df.select(
+        "id",
+        "k",
+        F.row_number().over(g).alias("rn"),
+        F.sum("c").over(g).alias("cum"),
+        F.max("c").over(g.rangeBetween(W.unboundedPreceding, -1)).alias("pre"),
+    ).collect()
+
+    assert sorted((r["k"], r["rn"]) for r in got) == sorted((r["k"], r["rn"]) for r in want)
+    assert {(r["id"], r["cum"], r["pre"]) for r in got} == {
+        (r["id"], r["cum"], r["pre"]) for r in want
+    }
+    cs = [c for _, _, c in rows]
+    assert totals == {"_row_off": len(rows), "_off_c": sum(cs), "_pre_c": max(cs)}
 
 
 def test_simhash_verified_prefilter_sits_at_banding_guarantee(spark):
