@@ -65,10 +65,6 @@ def normalize_event_ts(df: DataFrame) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
 def spread(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin repartition IFF the input has fewer partitions than the
     cluster has slots. A parquet scan parallelizes at row-group granularity,

@@ -12,6 +12,7 @@ is produced on demand.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window as W
@@ -316,8 +317,39 @@ def track_for_release(df: DataFrame) -> DataFrame:
 
 
 def tracked_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint(eager) + ``track_for_release``."""
-    return track_for_release(df.localCheckpoint(eager=True))
+    """``checkpoint`` + ``track_for_release``."""
+    return track_for_release(checkpoint(df))
+
+
+def iterate(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    settle: Callable[[DataFrame], object] | None = None,
+) -> tuple[DataFrame, bool]:
+    """The one pinned loop for iterative lineage (SURVEY.md §4.3): round
+    ``r`` = 1..rounds pins ``checkpoint(step(state, r))`` and releases the
+    state it replaces, so plan depth and checkpoint storage stay O(1) in
+    rounds. Only frames pinned here are released; the caller's round-0
+    ``state`` stays the caller's. With ``settle`` (state -> scalar), the
+    loop stops after the first round that leaves that value unchanged.
+    Returns ``(final, settled)``; ``final`` feeds the caller's returned
+    plan, so it goes to ``track_for_release``, not ``release_checkpoint``."""
+    mark = settle(state) if settle else None
+    pinned = settled = False
+    for r in range(1, rounds + 1):
+        nxt = checkpoint(step(state, r))
+        if pinned:
+            release_checkpoint(state)
+        state, pinned = nxt, True
+        if settle:
+            prev, mark = mark, settle(state)
+            if mark == prev:
+                settled = True
+                break
+    if pinned:
+        track_for_release(state)
+    return state, settled
 
 
 def release_query_checkpoints() -> int:

@@ -664,14 +664,12 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-cluster resolution — the stage after pair generation that
     every production dedup pipeline needs: candidate pairs → connected
     components → one canonical doc per cluster (min doc_id). Iterative
-    min-label propagation: each round, every node takes the min label
-    among itself and its neighbors (one join + one hash aggregate), with
-    per-round ``localCheckpoint`` applying the same bounded-lineage
-    discipline as training (SURVEY.md §4.3). Convergence in O(cluster
-    diameter) rounds — near-dup clusters are almost-cliques, so 2-3
-    rounds; detected by the label-sum fixpoint (labels only decrease, so
-    an unchanged sum IS convergence — one scalar agg per round, no
-    row-level diff join). The DuckDB oracle is a recursive-CTE transitive
+    min-label propagation (`min_label_components`): each round, every
+    node takes the min label among itself and its neighbors (one join +
+    one hash aggregate). Convergence in O(cluster diameter) rounds —
+    near-dup clusters are almost-cliques, so 2-3 rounds; detected by the
+    label-sum fixpoint (one scalar agg per round, no row-level diff
+    join). The DuckDB oracle is a recursive-CTE transitive
     closure — affordable at sf0.01, quadratic in cluster size; the
     propagation form ships |V|+|E| rows per round at 100 TB."""
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
@@ -699,21 +697,22 @@ def min_label_components(
     bit-identical to iterating over the full node table; a new caller
     whose edges can dangle must semi-join pairs against nodes first.
 
-    Per-round localCheckpoint bounds lineage; the label-sum fixpoint
-    (labels only decrease) detects convergence with one scalar agg per
-    round. Property-tested against a union-find replica in
-    tests/test_properties.py."""
+    Rounds go through ``iterate``; the label-sum fixpoint (labels only
+    decrease, so an unchanged sum IS convergence) settles it with one
+    scalar agg per round. Property-tested against a union-find replica
+    in tests/test_properties.py."""
     from ..models.common import (
         broadcast_if_fits,
+        checkpoint,
+        iterate,
         release_checkpoint,
-        track_for_release,
     )
 
     a, b = pairs.columns
     # both directions in ONE pass over pairs (the union-of-selects form
     # carried the whole candidate-generation subtree twice in the plan —
     # the item_cf_similarity lesson, guide §2.4)
-    edges = (
+    edges = checkpoint(
         pairs.select(
             F.explode(
                 F.array(
@@ -721,9 +720,7 @@ def min_label_components(
                     F.struct(F.col(b).alias("src"), F.col(a).alias("dst")),
                 )
             ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .localCheckpoint(eager=True)  # reused every round; released below
+        ).select("e.src", "e.dst")
     )
     # iterate ONLY over nodes that touch an edge: singletons can never
     # change label, so shipping the full node table through every round's
@@ -731,50 +728,34 @@ def min_label_components(
     # bytes; near-dup graphs are sparse, |touched| << |nodes|). Singletons
     # rejoin with lbl = own id at the end — bit-identical output.
     touched = edges.select(F.col("src").alias("node")).distinct()
-    labels = touched.select("node", F.col("node").alias("lbl")).localCheckpoint(
-        eager=True
-    )
-    # touched-node count is known after the checkpoint (one cheap count on
-    # a materialized frame) — broadcast-hint the per-round label join
-    # while the 2-BIGINT label table fits (guide §3.1; see pagerank_items)
-    label_bytes = labels.count() * 3 * 8
-    prev_sum = labels.agg(F.sum("lbl")).first()[0]
-    converged = False
-    for _ in range(max_rounds):
+    # round 0 is pinned here (the count, the first label sum and round 1
+    # all read it) and released below with the edges
+    labels0 = checkpoint(touched.select("node", F.col("node").alias("lbl")))
+    # broadcast-hint the per-round label join while the 2-BIGINT label
+    # table fits (guide §3.1; see pagerank_items)
+    label_bytes = labels0.count() * 3 * 8
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         bl = broadcast_if_fits(labels, label_bytes)
         nbr = (
             edges.join(bl, edges.src == bl.node)
             .groupBy(F.col("dst").alias("node"))
             .agg(F.min("lbl").alias("nbr_lbl"))
         )
-        new_labels = (
-            labels.join(nbr, "node", "left")
-            .select(
-                "node",
-                F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
-            )
-            .localCheckpoint(eager=True)
+        return labels.join(nbr, "node", "left").select(
+            "node",
+            F.least(F.col("lbl"), F.coalesce("nbr_lbl", "lbl")).alias("lbl"),
         )
-        # the superseded round's checkpoint blocks are dead the moment the
-        # new round materializes — release them RDD-level or a long bench/
-        # sweep session accumulates one block pair per round per query
-        # (the models/base.py lesson; unpersist() alone is a no-op here)
-        release_checkpoint(labels)
-        labels = new_labels
-        cur_sum = labels.agg(F.sum("lbl")).first()[0]
-        if cur_sum == prev_sum:
-            converged = True
-            break
-        prev_sum = cur_sum
+
+    labels, converged = iterate(
+        labels0, step, max_rounds, settle=lambda df: df.agg(F.sum("lbl")).first()[0]
+    )
     release_checkpoint(edges)
-    # the returned plan reads the FINAL labels checkpoint — tracked for
-    # registry-side release after the caller's action (ADVICE r08)
-    track_for_release(labels)
+    release_checkpoint(labels0)
     if not converged:
-        # The fixpoint check already detects this for free: labels only
-        # decrease, so an unchanged sum IS convergence — and a changed sum
-        # at exhaustion means some component (diameter > max_rounds, e.g. a
-        # long near-dup chain) still carries wrong cluster ids.
+        # a changed sum at exhaustion means some component (diameter >
+        # max_rounds, e.g. a long near-dup chain) still carries wrong
+        # cluster ids
         raise RuntimeError(
             f"min_label_components did not converge within {max_rounds} rounds; "
             "a component's diameter exceeds max_rounds — raise max_rounds"

@@ -1,25 +1,48 @@
-"""Graph operators (SURVEY.md §2.9 round-3 addition X69): weighted
-PageRank over the item co-occurrence graph. Complements the neighborhood
-(item_cf_similarity) and factor (models/) recommenders with the classic
-graph-centrality item-importance signal, and complements dedup_clusters'
-connected components as the second iterative graph algorithm — same
-join+agg-per-round shape, same per-round localCheckpoint lineage
-discipline (``operators/dedup.py`` min_label_components).
+"""Graph operators over the item co-purchase graph (SURVEY.md §2.9, X69
+onward): centrality (PageRank, personalized PageRank), structure
+(triangles, degree assortativity), distance (BFS, Bellman-Ford) and
+communities (label propagation). Every query reads its edges from
+:func:`copurchase_edges`; the iterative ones loop through
+``models.common.iterate``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from ..data import load_table
 from ..models.common import (
     broadcast_if_fits,
+    checkpoint,
+    iterate,
     release_checkpoint,
-    track_for_release,
     tracked_checkpoint,
 )
 from ..registry import query
+
+
+def copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Directed co-purchase edges ``(u, v, c)``: every ordered pair of
+    distinct items that share an order, with ``c`` the number of orders
+    holding both; (u, v) and (v, u) are both present. Per-order item sets
+    are bounded by order size, so pairs come from an in-row double explode
+    of each order's item set, never a self-join of the fact table;
+    ``collect_set`` drops a repeated (order, part) line, so ``c`` counts
+    orders, not lines."""
+    baskets = (
+        load_table(spark, sf_dir, "lineitem")
+        .groupBy("l_orderkey")
+        .agg(F.collect_set("l_partkey").alias("ps"))
+    )
+    return (
+        baskets.select(F.explode("ps").alias("u"), "ps")
+        .select("u", F.explode("ps").alias("v"))
+        .filter(F.col("u") != F.col("v"))
+        .groupBy("u", "v")
+        .agg(F.count("*").alias("c"))
+    )
+
 
 PR_ITERS = 5
 PR_DAMP = 0.85
@@ -65,32 +88,18 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     to uniform (r·n, so values sit near 1.0 with full 6-decimal
     resolution instead of collapsing toward 1/n as the catalog grows).
 
-    Graph build is the item_cf pattern: per-order item sets are bounded
-    (order size), so edges come from an in-row double explode — never an
-    item-keyed self-join. The graph is symmetric by construction, so
-    there are no dangling nodes and the node set is closed under
-    iteration — the (1-d)/n teleport needs no dangling-mass correction.
-    Each iteration is ONE u-keyed join (ranks ⋈ normalized edges) + ONE
-    v-keyed agg, with an eager localCheckpoint pinning lineage depth at
-    O(1) — the same per-round discipline as min_label_components
-    (dedup.py) and the training epochs (models/base.py). The
+    The co-purchase graph is symmetric, so there are no dangling nodes
+    and the node set is closed under iteration — the (1-d)/n teleport
+    needs no dangling-mass correction. Each round (``iterate``) is ONE
+    u-keyed join (ranks ⋈ normalized edges) + ONE v-keyed agg. The
     driver-side scalars are n (one count) and the loop bound; ranks
     never leave the cluster."""
-    lines = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
+    edges = copurchase_edges(spark, sf_dir).select(
+        "u", "v", F.col("c").cast("double").alias("w")
     )
-    grp = lines.groupBy("o").agg(F.collect_set("p").alias("ps"))
-    e = (
-        grp.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode("ps").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    edges = e.groupBy("u", "v").agg(F.count("*").cast("double").alias("w"))
     deg = edges.groupBy("u").agg(F.sum("w").alias("dw"))
     p = spark.sparkContext.defaultParallelism
-    en = (
+    en = checkpoint(
         edges.join(deg, "u")
         .select("u", "v", (F.col("w") / F.col("dw")).alias("wn"))
         # hash-partition on the iteration join key BEFORE the checkpoint:
@@ -101,7 +110,6 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
         # and this is the difference between shuffling the edge table
         # once vs once per iteration.
         .repartition(p, "u")
-        .localCheckpoint(eager=True)  # reused every iteration
     )
     n = float(deg.count())
     ranks = deg.select(F.col("u").alias("node"), F.lit(1.0 / n).alias("r"))
@@ -112,9 +120,10 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     # past the threshold the join stays keyed against the u-partitioned
     # edge checkpoint
     rank_bytes = int(n) * 3 * 8
-    for it in range(PR_ITERS):
+
+    def step(ranks: DataFrame, _: int) -> DataFrame:
         br = broadcast_if_fits(ranks, rank_bytes)
-        new_ranks = (
+        return (
             en.join(br, en["u"] == br["node"])
             .groupBy(F.col("v").alias("node2"))
             .agg(
@@ -124,25 +133,12 @@ def pagerank_items(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("r")
             )
             .select(F.col("node2").alias("node"), "r")
-            .localCheckpoint(eager=True)
         )
-        # free the superseded round's blocks immediately (the models/
-        # base.py lesson): without this every pagerank run leaks
-        # PR_ITERS checkpointed RDDs into the session and a long bench/
-        # sweep session accumulates storage pressure (r08 profiling saw
-        # late-session runs of this family 2-5x their early-session
-        # time). The round-0 seed frame is not a checkpoint: skip it.
-        if it:
-            release_checkpoint(ranks)
-        ranks = new_ranks
-    out = ranks.select("node", F.round(F.col("r") * n, 6).alias("rank_rel"))
-    # the returned plan reads only the FINAL ranks checkpoint — the edge
-    # table's blocks are dead once the last round has materialized; the
-    # final checkpoint itself is registered for registry-side release
-    # after the caller's action completes (ADVICE r08)
+
+    ranks, _ = iterate(ranks, step, PR_ITERS)
+    # the returned plan reads only the final ranks checkpoint
     release_checkpoint(en)
-    track_for_release(ranks)
-    return out
+    return ranks.select("node", F.round(F.col("r") * n, 6).alias("rank_rel"))
 
 
 # --- triangle count / transitivity (X113) ---------------------------------
@@ -189,22 +185,9 @@ def graph_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every triangle is counted exactly once from its minimum-rank apex.
     Three item-keyed equi-joins; the degree orientation is what keeps
     the wedge explosion bounded when a power-law hub shows up at 100 TB
-    — wedges sit at low-degree apexes, never at the hub. Edge build is
-    the per-order in-row pattern (order sizes bounded), same as
-    pagerank/item_cf."""
-    lines = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    grp = lines.groupBy("o").agg(F.collect_set("p").alias("ps"))
-    e = (
-        grp.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode("ps").alias("v"))
-        .filter(F.col("u") < F.col("v"))
-        .distinct()
-    )
-    return triangle_stats_from_edges(e)
+    — wedges sit at low-degree apexes, never at the hub."""
+    e = copurchase_edges(spark, sf_dir).filter(F.col("u") < F.col("v"))
+    return triangle_stats_from_edges(e.select("u", "v"))
 
 
 def triangle_stats_from_edges(e: DataFrame) -> DataFrame:
@@ -298,50 +281,41 @@ def graph_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     {BFS_MAX_DEPTH}) from the min-id seed item over the co-purchase
     graph — the reachability/blast-radius primitive next to
     `pagerank_items` (fixed-point scoring) and `min_label_components`
-    (full closure). Frontier iteration in its scalable form: each round
-    is ONE u-keyed join of the CURRENT frontier (not all visited nodes)
-    against the pre-partitioned checkpointed edge table, a LEFT ANTI
-    against the visited set so a node's level is its FIRST visit (=
-    min distance), and an eager localCheckpoint pinning lineage at O(1)
-    per round — with early exit when a frontier drains. The oracle's
-    recursive CTE must UNION (not UNION ALL): path-counting through a
-    dense co-purchase graph is combinatorial; distinct (node, lvl)
-    states are |V| x depth."""
-    lines = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    grp = lines.groupBy("o").agg(F.collect_set("p").alias("ps"))
-    e = (
-        grp.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode("ps").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
+    (full closure). Frontier iteration in its scalable form: round d
+    (``iterate``) is ONE u-keyed join of the level d-1 frontier (not all
+    visited nodes) against the pre-partitioned checkpointed edge table
+    and a LEFT ANTI against the visited set, so a node's level is its
+    FIRST visit (= min distance); the loop settles when a round adds no
+    node. The oracle's recursive CTE must UNION (not UNION ALL):
+    path-counting through a dense co-purchase graph is combinatorial;
+    distinct (node, lvl) states are |V| x depth."""
     p = spark.sparkContext.defaultParallelism
-    edges = e.repartition(p, "u").localCheckpoint(eager=True)
-    seed = lines.agg(F.min("p").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("level")
+    edges = checkpoint(
+        copurchase_edges(spark, sf_dir).select("u", "v").repartition(p, "u")
     )
-    # depth <= BFS_MAX_DEPTH bounds the checkpoint count; all of them are
-    # tracked for release when the next query starts (ADVICE
-    # r08 — only the FINAL levels checkpoint feeds the returned plan, the
-    # rest are dead the moment the next union materializes)
-    levels = tracked_checkpoint(seed)
-    frontier = levels.select("node")
-    for d in range(1, BFS_MAX_DEPTH + 1):
-        nxt = tracked_checkpoint(
+    seed = (
+        load_table(spark, sf_dir, "lineitem")
+        .agg(F.min("l_partkey").alias("node"))
+        .select("node", F.lit(0).cast("long").alias("level"))
+    )
+
+    def step(levels: DataFrame, d: int) -> DataFrame:
+        frontier = levels.filter(F.col("level") == d - 1).select("node")
+        nxt = (
             edges.join(frontier, edges["u"] == frontier["node"])
             .select(F.col("v").alias("node"))
             .distinct()
             .join(levels.select("node"), "node", "left_anti")
             .select("node", F.lit(d).cast("long").alias("level"))
         )
-        if nxt.isEmpty():
-            break
-        levels = tracked_checkpoint(levels.unionByName(nxt))
-        frontier = nxt.select("node")
+        return levels.unionByName(nxt)
+
+    def deepest(levels: DataFrame) -> int:
+        # stops rising exactly when a round adds no node; one ordered take
+        # reads it in one job (a count or max aggregate costs two under AQE)
+        return levels.orderBy(F.col("level").desc()).first()["level"]
+
+    levels, _ = iterate(seed, step, BFS_MAX_DEPTH, settle=deepest)
     release_checkpoint(edges)
     return levels
 
@@ -413,37 +387,26 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     goes to the seed set instead of uniform, so rank concentrates in the
     seed's neighborhood; emitted as r·n relative to uniform.
 
-    Same physical discipline as pagerank_items: edges from the in-row
-    per-order double explode, normalized once, repartitioned on the
-    iteration key and checkpointed; each of the {PPR_ITERS} rounds is ONE
-    u-keyed join + ONE v-keyed agg + a nodes-keyed reassembly (the
-    teleport term needs every node present, so the |nodes|-row vector —
-    zeros included — is the iterated state on both engines; dropping
-    zero-mass nodes would make the two engines sum different term sets).
-    Driver-side scalars: n, |seeds| (two counts). At 10⁹ items the rank
-    vector stays keyed (never broadcast) and the per-round cost is one
-    co-located edge join, identical to the global variant."""
-    lines = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
+    Edges are normalized, partitioned and pinned as in pagerank_items;
+    each of the {PPR_ITERS} rounds (``iterate``) is ONE u-keyed join + ONE
+    v-keyed agg + a nodes-keyed reassembly (the teleport term needs every
+    node present, so the |nodes|-row vector — zeros included — is the
+    iterated state on both engines; dropping zero-mass nodes would make
+    the two engines sum different term sets). Driver-side scalars: n,
+    |seeds| (two counts). At 10⁹ items the rank vector stays keyed (never
+    broadcast) and the per-round cost is one co-located edge join,
+    identical to the global variant."""
+    edges = copurchase_edges(spark, sf_dir).select(
+        "u", "v", F.col("c").cast("double").alias("w")
     )
-    grp = lines.groupBy("o").agg(F.collect_set("p").alias("ps"))
-    e = (
-        grp.select(F.explode("ps").alias("u"), "ps")
-        .select("u", F.explode("ps").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-    )
-    edges = e.groupBy("u", "v").agg(F.count("*").cast("double").alias("w"))
     deg = edges.groupBy("u").agg(F.sum("w").alias("dw"))
     p = spark.sparkContext.defaultParallelism
-    en = (
+    en = checkpoint(
         edges.join(deg, "u")
         .select("u", "v", (F.col("w") / F.col("dw")).alias("wn"))
         .repartition(p, "u")
-        .localCheckpoint(eager=True)
     )
-    nodes = deg.select(F.col("u").alias("node")).localCheckpoint(eager=True)
+    nodes = checkpoint(deg.select(F.col("u").alias("node")))
     n = float(nodes.count())
     cust = (
         load_table(spark, sf_dir, "customer")
@@ -469,26 +432,23 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("node")
         .distinct()
     )
-    sn = seed_items.join(nodes, "node").localCheckpoint(eager=True)
+    sn = checkpoint(seed_items.join(nodes, "node"))
     ns = float(sn.count())
     seed_flag = sn.withColumn("is_seed", F.lit(True))
-    r = (
-        nodes.join(seed_flag, "node", "left")
-        .select(
-            "node",
-            F.when(F.col("is_seed"), F.lit(1.0 / ns)).otherwise(0.0).alias("r"),
-        )
-        .localCheckpoint(eager=True)
+    r = nodes.join(seed_flag, "node", "left").select(
+        "node",
+        F.when(F.col("is_seed"), F.lit(1.0 / ns)).otherwise(0.0).alias("r"),
     )
     rank_bytes = int(n) * 3 * 8
-    for _ in range(PPR_ITERS):
+
+    def step(r: DataFrame, _: int) -> DataFrame:
         br = broadcast_if_fits(r, rank_bytes)
         mass = (
             en.join(br, en["u"] == br["node"])
             .groupBy(F.col("v").alias("mnode"))
             .agg(F.sum(F.col("r") * F.col("wn")).alias("mass"))
         )
-        new_r = (
+        return (
             nodes.join(mass, nodes["node"] == mass["mnode"], "left")
             .join(seed_flag.select("node", "is_seed"), "node", "left")
             .select(
@@ -498,19 +458,14 @@ def personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + F.lit(PPR_DAMP) * F.coalesce(F.col("mass"), F.lit(0.0))
                 ).alias("r"),
             )
-            .localCheckpoint(eager=True)
         )
-        # release the superseded round (see pagerank_items)
-        release_checkpoint(r)
-        r = new_r
-    out = r.select("node", F.round(F.col("r") * n, 6).alias("ppr_rel"))
-    # only the final r checkpoint feeds the returned plan — tracked for
-    # registry-side release (ADVICE r08)
+
+    r, _ = iterate(r, step, PPR_ITERS)
+    # only the final r checkpoint feeds the returned plan
     release_checkpoint(en)
     release_checkpoint(nodes)
     release_checkpoint(sn)
-    track_for_release(r)
-    return out
+    return r.select("node", F.round(F.col("r") * n, 6).alias("ppr_rel"))
 
 
 LPA_ROUNDS = 4  # fixed synchronous rounds (unrolled in the oracle)
@@ -566,42 +521,32 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     weakness) is engineered away: synchronous rounds (no visit order),
     votes weighted by exact integer co-occurrence counts, ties to the
     smallest label — so both engines propagate identical labels and a
-    fixed {LPA_ROUNDS}-round unroll is value-checkable. Plan: in-order
-    co-occurrence edges once (order-keyed self-join, per-order fanout
-    schema-bounded), then per round ONE u-keyed join + ONE v-keyed
-    vote agg + node-keyed argmax window, with localCheckpoint pinning
-    plan depth O(1) per round (the pagerank_items discipline) — at
-    10⁹ nodes every stage stays hash-partitioned on node id."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a = li.select(F.col("o"), F.col("p").alias("u"))
-    b = li.select(F.col("o").alias("o2"), F.col("p").alias("v"))
+    fixed {LPA_ROUNDS}-round unroll is value-checkable. Plan: per round
+    (``iterate``) ONE u-keyed join + ONE v-keyed vote agg + node-keyed
+    argmax window — at 10⁹ nodes every stage stays hash-partitioned on
+    node id."""
     p = spark.sparkContext.defaultParallelism
-    edges = (
-        a.join(b, (a["o"] == b["o2"]) & (a["u"] != b["v"]))
-        .groupBy("u", "v")
-        .agg(F.count("*").alias("w"))
+    edges = checkpoint(
+        copurchase_edges(spark, sf_dir)
+        .select("u", "v", F.col("c").alias("w"))
         # partition on the per-round JOIN key (u), not v: localCheckpoint
         # preserves the partitioning, so every round's labels join is
         # co-located and only the |nodes|-row labels table moves; the
-        # vote agg shuffles on (v, lab) either way (the pagerank_items
-        # discipline — the old repartition("v") helped neither stage)
+        # vote agg shuffles on (v, lab) either way
         .repartition(p, "u")
-        .localCheckpoint(eager=True)
     )
-    labels = li.select(F.col("p").alias("node")).distinct().select(
-        "node", F.col("node").alias("lab")
+    labels = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(F.col("l_partkey").alias("node"))
+        .distinct()
+        .select("node", F.col("node").alias("lab"))
     )
-    from pyspark.sql import Window as W
-
     # labels is |nodes| × 2 BIGINTs; the node count is cheap to learn once
     # and lets every round's join be broadcast-hinted while it fits
     # (guide §3.1 — see pagerank_items)
     label_bytes = labels.count() * 3 * 8
-    for it in range(LPA_ROUNDS):
+
+    def step(labels: DataFrame, _: int) -> DataFrame:
         bl = broadcast_if_fits(labels, label_bytes)
         votes = (
             edges.join(bl, edges["u"] == bl["node"])
@@ -618,20 +563,13 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter(F.col("rn") == 1)
             .select("vnode", F.col("lab").alias("new_lab"))
         )
-        new_labels = (
-            labels.join(win, labels["node"] == win["vnode"], "left")
-            .select("node", F.coalesce("new_lab", "lab").alias("lab"))
-            .localCheckpoint(eager=True)
+        return labels.join(win, labels["node"] == win["vnode"], "left").select(
+            "node", F.coalesce("new_lab", "lab").alias("lab")
         )
-        # release the superseded round (see pagerank_items)
-        if it:
-            release_checkpoint(labels)
-        labels = new_labels
+
+    labels, _ = iterate(labels, step, LPA_ROUNDS)
     sizes = labels.groupBy("lab").agg(F.count("*").alias("community_size"))
-    # the returned plan reads only the final labels checkpoint — tracked
-    # for registry-side release (ADVICE r08)
     release_checkpoint(edges)
-    track_for_release(labels)
     return (
         labels.join(F.broadcast(sizes), "lab")
         .select(
@@ -689,48 +627,32 @@ def graph_shortest_paths_weighted(spark: SparkSession, sf_dir: str) -> DataFrame
     graph family's distance axis: bfs_levels is the unit-weight special
     case. All-arithmetic-integer (no float min ties), so the frontier
     is bit-deterministic; k rounds bound the hop radius exactly like
-    the oracle's unrolled CTEs. Plan per round: ONE u-keyed
-    edges⋈frontier join + ONE v-keyed MIN agg + a union-min against
-    the standing distances, localCheckpoint pinning plan depth (the
-    pagerank/LPA discipline) — every stage hash-partitioned on node
-    id, 10⁹-node-safe."""
-    li = (
-        load_table(spark, sf_dir, "lineitem")
-        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
-        .distinct()
-    )
-    a = li.select("o", F.col("p").alias("u"))
-    b = li.select(F.col("o").alias("o2"), F.col("p").alias("v"))
-    edges = (
-        a.join(b, (a["o"] == b["o2"]) & (a["u"] != b["v"]))
-        .groupBy("u", "v")
-        .agg(F.expr("CAST(1 + 1000 DIV COUNT(*) AS BIGINT)").alias("w"))
+    the oracle's unrolled CTEs. Plan per round (``iterate``): ONE
+    u-keyed edges⋈frontier join + ONE v-keyed MIN agg + a union-min
+    against the standing distances — every stage hash-partitioned on
+    node id, 10⁹-node-safe."""
+    edges = checkpoint(
+        copurchase_edges(spark, sf_dir)
+        .select("u", "v", F.expr("CAST(1 + 1000 DIV c AS BIGINT)").alias("w"))
         .repartition("u")
-        .localCheckpoint()
     )
-    seed = li.agg(F.min("p").alias("node")).select(
-        "node", F.lit(0).cast("long").alias("dist")
+    seed = (
+        load_table(spark, sf_dir, "lineitem")
+        .agg(F.min("l_partkey").alias("node"))
+        .select("node", F.lit(0).cast("long").alias("dist"))
     )
-    dist = seed.localCheckpoint()
-    for _ in range(BF_ROUNDS):
+
+    def step(dist: DataFrame, _: int) -> DataFrame:
         cand = (
             edges.join(dist, edges["u"] == dist["node"])
             .groupBy(F.col("v").alias("cnode"))
             .agg(F.min(F.col("dist") + F.col("w")).alias("cdist"))
             .select(F.col("cnode").alias("node"), F.col("cdist").alias("dist"))
         )
-        new_dist = (
-            dist.unionByName(cand)
-            .groupBy("node")
-            .agg(F.min("dist").alias("dist"))
-            .localCheckpoint()
-        )
-        # the superseded round's blocks are dead once the union has
-        # materialized (the pagerank discipline, ADVICE r08)
-        release_checkpoint(dist)
-        dist = new_dist
+        return dist.unionByName(cand).groupBy("node").agg(F.min("dist").alias("dist"))
+
+    dist, _ = iterate(seed, step, BF_ROUNDS)
     release_checkpoint(edges)
-    track_for_release(dist)
     return dist.orderBy("node")
 
 
@@ -777,32 +699,11 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-occurrence the coefficient is honestly near ZERO (|r| < 0.05,
     test-pinned along with r ∈ [−1, 1] and the recomputation of r
     from the emitted integers) — the neutral baseline real
-    co-purchase graphs deviate from. Plan: in-row basket edge generation
-    (never a fact self-join on Spark's side), one degree rollup, two
-    keyed joins, one scalar agg. At 100 TB degrees can reach 10⁶ ⇒
-    Σx² ≈ 10¹⁸ nears BIGINT range — the documented upgrade is
-    DECIMAL(38,0) sufficient stats, same shape."""
-    li = load_table(spark, sf_dir, "lineitem")
-    baskets = (
-        li.groupBy("l_orderkey")
-        .agg(F.array_sort(F.collect_set("l_partkey")).alias("items"))
-        .filter(F.size("items") >= 2)
-    )
-    # in-row pair generation (both orientations), then global distinct:
-    # the same no-self-join discipline as pagerank_items
-    edges = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(items, x -> "
-                    "transform(filter(items, y -> y != x), y -> "
-                    "struct(x AS u, y AS v))))"
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-    )
+    co-purchase graphs deviate from. Plan: the co-purchase edges, one
+    degree rollup, two keyed joins, one scalar agg. At 100 TB degrees
+    can reach 10⁶ ⇒ Σx² ≈ 10¹⁸ nears BIGINT range — the documented
+    upgrade is DECIMAL(38,0) sufficient stats, same shape."""
+    edges = copurchase_edges(spark, sf_dir).select("u", "v")
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count("*").alias("d")
     )

@@ -812,8 +812,8 @@ def multimodal_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X334: duplicate-cluster resolution for the IMAGE modality — the
     stage after multimodal_image_ahash (X323) pair generation, closing
     the image dedup ladder the way dedup_clusters closes the text one:
-    near-dup pairs -> connected components (iterative min-label
-    propagation, per-round localCheckpoint, label-sum fixpoint) -> one
+    near-dup pairs -> connected components (`min_label_components`:
+    iterative min-label propagation, label-sum fixpoint) -> one
     canonical payload per cluster (min doc_id). Perceptual near-dup is
     not transitive, so clustering is a POLICY decision this operator
     makes explicit — the cluster is the union-find closure of the

@@ -2006,7 +2006,7 @@ def mmr_from_candidates(cands: DataFrame) -> DataFrame:
     drive the greedy loop with candidate sets where the redundancy penalty
     provably fires (whether it fires on the derived ratings is an accident
     of the testdata generation)."""
-    from ..models.common import release_checkpoint, track_for_release
+    from ..models.common import iterate
 
     w1 = W.partitionBy("user_id").orderBy(F.col("score").desc(), "item_id")
     sel = (
@@ -2017,8 +2017,8 @@ def mmr_from_candidates(cands: DataFrame) -> DataFrame:
             F.col("score").alias("adjusted"), F.lit(1).alias("pos"),
         )
     )
-    acc = sel
-    for k in range(2, MMR_PICKS + 1):
+
+    def step(acc: DataFrame, r: int) -> DataFrame:
         rem = cands.join(
             acc.select("user_id", "item_id"), ["user_id", "item_id"], "left_anti"
         )
@@ -2041,16 +2041,13 @@ def mmr_from_candidates(cands: DataFrame) -> DataFrame:
             .filter(F.col("rn") == 1)
             .select(
                 "user_id", "item_id", "sim_attr", "score", "adjusted",
-                F.lit(k).alias("pos"),
+                F.lit(r + 1).alias("pos"),
             )
         )
-        new_acc = acc.unionByName(pick).localCheckpoint()
-        # the superseded accumulator's blocks are dead once the union has
-        # materialized (the pagerank discipline, ADVICE r08); round 1's
-        # acc is not a checkpoint — release_checkpoint no-ops there
-        release_checkpoint(acc)
-        acc = new_acc
-    track_for_release(acc)
+        return acc.unionByName(pick)
+
+    # round r picks position r + 1 (pick 1 is the plain argmax above)
+    acc, _ = iterate(sel, step, MMR_PICKS - 1)
     return acc.select(
         "user_id", F.col("pos").cast("long").alias("pos"),
         "item_id", "sim_attr", "score", "adjusted",

@@ -198,8 +198,9 @@ def warm(spark: SparkSession, sf_dir: str) -> dict[str, Timed]:
 # this list fronts the queries whose code changed since the last fully
 # green round (round 8): the two model-fit queries, whose error cache was
 # restored to the round-8 layout, then every query function round 9 edited
-# or whose helper it edited (``git diff 355ebaa 93d26c1``). The rest follow
-# in registration order.
+# or whose helper it edited (``git diff 355ebaa 93d26c1``), plus
+# ``graph_degree_assortativity``, whose edge build changed since. The rest
+# follow in registration order.
 DRIVER_PRIORITY: list[str] = [
     "funk_svd_fit_metrics",
     "als_fit_metrics",
@@ -223,6 +224,7 @@ DRIVER_PRIORITY: list[str] = [
     "label_propagation_communities",
     "graph_shortest_paths_weighted",
     "graph_triangle_stats",
+    "graph_degree_assortativity",
     "dq_rule_violations",
     "similarity_ann_ivf",
     "dedup_embedding_cosine",

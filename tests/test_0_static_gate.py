@@ -1,7 +1,7 @@
 """Static gate: catches name and import breakage before any Spark test runs.
 
 Stdlib only, no SparkSession; the file name sorts first under
-``pytest tests/``. Five checks over every module of the package and every
+``pytest tests/``. Six checks over every module of the package and every
 harness script (``bench.py``, ``correctness_local.py``,
 ``__spark_entry__.py``, ``tools/*.py``, loaded by path, since no test
 imports them):
@@ -16,7 +16,9 @@ imports them):
 4. every call ``f(...)`` whose bare name ``f`` resolves to a package,
    harness or ``oracle_util`` function binds against ``inspect.signature(f)``;
 5. ``spark_partition_id`` appears in the package only inside
-   ``models.common.block_offsets``.
+   ``models.common.block_offsets``;
+6. ``.localCheckpoint(`` is called only in ``models.common``, and no
+   ``release_checkpoint(`` sits in a loop body under ``operators``.
 
 pyflakes and ruff would cover 2 and 3, but neither is a dependency here.
 """
@@ -315,3 +317,33 @@ def test_spark_partition_id_only_in_block_offsets():
             if uses and id(node) not in allowed:
                 bad.append(f"{name}:{node.lineno}")
     assert not bad, "spark_partition_id outside block_offsets:\n" + "\n".join(bad)
+
+
+def _callee(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def test_checkpoint_loops_go_through_iterate():
+    """Iterative lineage has one path: ``models.common`` pins frames
+    (``checkpoint``, ``tracked_checkpoint``) and ``models.common.iterate``
+    releases each superseded round. A raw ``.localCheckpoint(`` elsewhere,
+    or a ``release_checkpoint(`` in a loop body under ``operators``, is a
+    hand copy of that loop."""
+    home = f"{PKG.__name__}.models.common"
+    ops = f"{PKG.__name__}.operators."
+    bad = set()
+    for name, (_, _, tree, _) in MODULES.items():
+        for node in ast.walk(tree):
+            if (
+                name != home
+                and isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "localCheckpoint"
+            ):
+                bad.add(f"{name}:{node.lineno} .localCheckpoint(")
+            if name.startswith(ops) and isinstance(node, (ast.For, ast.While)):
+                for sub in (n for stmt in node.body + node.orelse for n in ast.walk(stmt)):
+                    if isinstance(sub, ast.Call) and _callee(sub) == "release_checkpoint":
+                        bad.add(f"{name}:{sub.lineno} release_checkpoint( in a loop")
+    assert not bad, "hand-written checkpoint loops:\n" + "\n".join(sorted(bad))

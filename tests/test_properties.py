@@ -467,6 +467,83 @@ def test_triangle_core_on_planted_graphs(spark):
     assert row["n_nodes"] == 5 and row["n_triangles"] == 4
 
 
+def test_iterate_pins_releases_and_settles_on_a_planted_path(spark):
+    """models.common.iterate driving min-label propagation over the path
+    0-1-2-3-4. A fixed 3-round run releases exactly 2 frames, never the
+    caller's unpinned round-0 input (RELEASE_STATS["failed"] stays put),
+    and leaves only the final frame tracked. With ``settle`` = label sum
+    it stops one round after the labels stop changing: 5 rounds of 20."""
+    from dask_recommender_system_spark.models.common import (
+        QUERY_CHECKPOINTS,
+        RELEASE_STATS,
+        iterate,
+        release_query_checkpoints,
+    )
+
+    n = 5
+    path = [(i, i + 1) for i in range(n - 1)]
+    edges = spark.createDataFrame(path + [(b, a) for a, b in path], "src long, dst long")
+    seed = spark.createDataFrame([(i, i) for i in range(n)], "node long, lbl long")
+    calls = []
+
+    def step(labels, r):
+        calls.append(r)
+        nbr = (
+            edges.join(labels, edges.src == labels.node)
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.min("lbl").alias("nbr"))
+        )
+        return labels.join(nbr, "node", "left").select(
+            "node", F.least("lbl", F.coalesce("nbr", "lbl")).alias("lbl")
+        )
+
+    def run(rounds, settle=None):
+        calls.clear()
+        release_query_checkpoints()
+        released0, failed0 = RELEASE_STATS["released"], RELEASE_STATS["failed"]
+        final, settled = iterate(seed, step, rounds, settle)
+        assert RELEASE_STATS["released"] - released0 == len(calls) - 1
+        assert RELEASE_STATS["failed"] == failed0
+        assert len(QUERY_CHECKPOINTS) == 1 and QUERY_CHECKPOINTS[0] is final
+        return {r["node"]: r["lbl"] for r in final.collect()}, settled
+
+    labels, settled = run(3)
+    assert calls == [1, 2, 3] and not settled
+    assert labels == {i: max(0, i - 3) for i in range(n)}
+
+    labels, settled = run(20, settle=lambda df: df.agg(F.sum("lbl")).first()[0])
+    assert settled and calls == [1, 2, 3, 4, 5]
+    assert labels == dict.fromkeys(range(n), 0)
+    release_query_checkpoints()
+
+
+def test_copurchase_edges_equal_the_order_keyed_self_join(spark, tmp_path):
+    """copurchase_edges' in-row explode counts ORDERS per item pair, like
+    the self-join of the distinct (order, part) lines: a repeated line
+    adds nothing, and a one-item order adds no edge."""
+    from dask_recommender_system_spark.operators.graph import copurchase_edges
+
+    rows = [(1, 10), (1, 11), (1, 12), (1, 11), (2, 10), (2, 11), (3, 12), (4, 13)]
+    path = str(tmp_path / "lineitem.parquet")
+    spark.createDataFrame(rows, "l_orderkey long, l_partkey long").write.parquet(path)
+    got = copurchase_edges(spark, str(tmp_path))
+    lines = (
+        spark.read.parquet(path)
+        .select(F.col("l_orderkey").alias("o"), F.col("l_partkey").alias("p"))
+        .distinct()
+    )
+    a, b = lines.alias("a"), lines.alias("b")
+    want = (
+        a.join(b, (F.col("a.o") == F.col("b.o")) & (F.col("a.p") != F.col("b.p")))
+        .groupBy(F.col("a.p").alias("u"), F.col("b.p").alias("v"))
+        .agg(F.count("*").alias("c"))
+    )
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+    c = {(r["u"], r["v"]): r["c"] for r in got.collect()}
+    assert c[(10, 11)] == c[(11, 10)] == 2 and c[(10, 12)] == 1
+    assert len(c) == 6 and all(13 not in e for e in c)
+
+
 def test_pca_power_iteration_matches_numpy(spark, sf_dir):
     """The fixed 8-step power method must land on numpy's leading
     eigenvector of the SAME rounded covariance (|cos| > 0.999) with the

@@ -17,7 +17,8 @@ from .oracle_util import check, duckdb_con
 
 #: the first three track checkpoints that feed their returned plans
 #: (graph loops, triangle junctions, SNM ranks); the rest are queries
-#: whose tracked checkpoints round 9 added, plus untracked neighbours
+#: whose tracked checkpoints round 9 added, the other loops on
+#: ``models.common.iterate`` (mmr, components), plus untracked neighbours
 RELEASE_QUERIES = [
     "pagerank_items",
     "graph_triangle_stats",
@@ -39,6 +40,9 @@ RELEASE_QUERIES = [
     "doc_similarity_sparse",
     "vocab_coverage",
     "blocking_quality_eval",
+    "mmr_rerank",
+    "dedup_clusters",
+    "graph_degree_assortativity",
 ]
 
 
