@@ -41,7 +41,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ``events.ts`` has been generated as both TIMESTAMP(NANOS) (which Spark
     refuses by default — read as int64 nanos via the legacy conf) and
     TIMESTAMP(MICROS) (read as TIMESTAMP_NTZ). Normalize both to a
-    microsecond session-tz TimestampType — sessions pin UTC, so this is a
+    microsecond session-tz TimestampType — queries run in a UTC session
+    (registry.releasing sets it at entry), so this is a
     wall-clock-preserving relabel and DuckDB's epoch() agrees."""
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

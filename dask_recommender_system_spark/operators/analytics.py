@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 from ..data import RATINGS_SQL, load_table
 from ..models.common import block_offsets, tracked_checkpoint
 from ..registry import query
-from .relational import ORACLE_EPOCH, _utc
+from .relational import ORACLE_EPOCH
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
 
@@ -52,7 +52,6 @@ def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join share the user_id shuffle key, so AQE coalesces them onto one
     exchange; the output is |weeks|² rows regardless of input size. No
     global window, no driver collect."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     first = ev.groupBy("user_id").agg(
         F.min(F.date_trunc("week", "ts")).alias("cohort_week")
@@ -94,7 +93,6 @@ def event_transition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     order total, so the lag is deterministic), then a tiny keyed agg whose
     output is |types|² rows. The per-user window is the same shuffle shape
     as sessionize; nothing global, no Python."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     return (
@@ -152,7 +150,6 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a broadcast cross join + comparison chain assigns scores. Scoring
     is embarrassingly parallel; the only data-sized shuffle is the
     per-customer agg."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     rfm = o.groupBy(F.col("o_custkey").alias("user_id")).agg(
         F.max(F.unix_timestamp("o_orderdate")).alias("recency"),
@@ -217,7 +214,6 @@ def scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     every warehouse needs; both windows are keyed per user (the sessionize
     shuffle shape), so at 100 TB it is one user_id exchange end-to-end —
     change-collapse, interval-close, and current-flagging all ride it."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     ch = (
@@ -266,7 +262,6 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed agg, both on user_id — a single exchange end-to-end at 100 TB.
     Zero-length intervals (same-second observations) drop out, matching
     the measure-theoretic definition and keeping the quotient NULL-free."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     o = ev.select(
@@ -318,7 +313,6 @@ def timeseries_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill window rides the same user_id key as the agg and join. Daily
     sums are ROUNDED BEFORE the fill on both engines so the propagated
     value is bit-identical however each engine ordered the additions."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = (
         ev.groupBy("user_id", F.date_trunc("day", "ts").alias("day"))
@@ -379,7 +373,6 @@ def rollup_incremental_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the merge is ONE keyed agg over partials — input-size-independent
     once the base is materialized. AVG is derived sum/cnt at the very end;
     rounding happens only on emitted columns, never on merged state."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").withColumn(
         "_part", F.floor(F.unix_timestamp("ts") / 86400) % 2
     )
@@ -458,7 +451,6 @@ def data_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per-bin PSI terms emit with Laplace smoothing so empty-on-one-side
     bins stay finite; the fleet-level alarm is SUM(psi_term) > 0.2,
     computable from this output by one more keyed agg at any scale."""
-    _utc(spark)
     cells = (
         load_table(spark, sf_dir, "events")
         .select(
@@ -541,7 +533,6 @@ def chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine weekday functions disagree on week origin. Emits per-cell
     expected counts and χ² contributions over observed cells; the test
     statistic is their sum."""
-    _utc(spark)
     d = load_table(spark, sf_dir, "events").select(
         "event_type",
         (F.floor(F.unix_timestamp("ts") / 86400).cast("long") % 7).alias("dow"),
@@ -613,7 +604,6 @@ def session_path_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ≤ {SESSION_PATH_TOP} rows."""
     from pyspark.sql import Window
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     paths = (
         ev.select(
@@ -678,7 +668,6 @@ def join_point_in_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join against the interval table. Intervals come from the same
     collapse/close construction scd2_intervals pins (half-open
     [from, to) — every event lands in exactly one version)."""
-    _utc(spark)
     iv = scd2_intervals(spark, sf_dir).select(
         "user_id", "attr", "valid_from", "valid_to"
     )
@@ -722,7 +711,6 @@ def grouped_median_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     centers (same discipline as the winsorize cut points). At unbounded
     group cardinality swap percentile → approx_percentile per the
     corpus_quality_filter twin note in SCALE.md."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     med = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -777,7 +765,6 @@ def interval_union_length(spark: SparkSession, sf_dir: str) -> DataFrame:
     coverage only. ONE user-keyed window + ONE keyed agg riding the same
     exchange; pure integer epoch arithmetic end-to-end so the hash
     comparison has no float surface at all."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.unix_timestamp("ts").alias("s"),
@@ -851,7 +838,6 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast is the 1-row observation-end scalar. The d == n final day
     maps to a -1e30 log-term so both engines underflow survival to
     exactly 0.0 instead of diverging on ln(0)."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.unix_timestamp("ts")).alias("first_s"),
@@ -982,7 +968,6 @@ def seasonal_dow_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ((epoch_day + 4) % 7), sidestepping the three incompatible dow()
     conventions across engines. One keyed agg to 7 rows + a 1-row
     global-mean broadcast — nothing here changes at 100 TB."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.select(
         ((F.floor(F.unix_timestamp("ts") / 86400) + 4) % 7)
@@ -1043,7 +1028,6 @@ def cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort-keyed join, and the cumulative sum runs PARTITIONED BY cohort
     over the |offsets|-bounded per-cohort series — output is
     |cohorts| x |offsets| rows regardless of order volume."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     f = o.groupBy("o_custkey").agg(
         F.min(F.date_trunc("week", "o_orderdate")).alias("cw")
@@ -1220,7 +1204,6 @@ def funnel_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle family, AQE coalesces); the final 5-number summary is a
     scalar gather of one row. Deltas are integer epoch seconds — the
     only floats are the interpolated percentiles, rounded."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     es = ev.select(
         "user_id", "event_type", F.unix_timestamp("ts").alias("t")
@@ -1285,7 +1268,6 @@ def event_rate_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     one event_type exchange. The cusum is an ORDERED sequential sum, so
     both engines execute bit-identical double additions — no
     summation-order tolerance needed."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -1624,7 +1606,6 @@ def period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     are tz-free epoch/604800 integers; the only float is the final
     division of two exact integers, identical on both engines. The lag
     window rides the same event_type key as the agg."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(
         "event_type",
@@ -1802,7 +1783,6 @@ def cumulative_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale, the `key_skew_profile` bounded-single-partition exception,
     documented because the input is provably tiny, not accidentally
     so). Day numbers are tz-free integers."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     fs = ev.groupBy("user_id").agg(
         F.min(F.floor(F.unix_timestamp("ts") / 86400)).cast("long").alias(
@@ -1876,7 +1856,6 @@ def timeseries_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame
     weight is one division of exact integer day distances; daily sums
     are rounded BEFORE interpolating so both engines interpolate
     identical endpoints (the `timeseries_resample` lesson)."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -2096,7 +2075,6 @@ def grouped_topk_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     array<struct> results survive Arrow conversion and cross-engine
     value comparison — the contract any downstream JSON serializer
     depends on."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -2141,7 +2119,6 @@ def activity_heatmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     timestamp — the tz discipline is the whole trick, since a heatmap
     shifted by the session zone is wrong in the most plausible-looking
     way."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return ev.groupBy(
         (((F.dayofweek("ts") + 5) % 7) + 1).cast("long").alias("iso_dow"),
@@ -2174,7 +2151,6 @@ def argmax_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-defined when timestamps repeat, so the ordering key is the
     COMPOSITE (epoch micros-scaled + event_id) — unique by
     construction, deterministic on both engines."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     key = F.unix_timestamp("ts") * 1000000 + F.col("event_id")
     return ev.groupBy("user_id").agg(
@@ -2293,7 +2269,6 @@ def dense_scaffold_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides nowhere near); facts left-join in and COALESCE to zero,
     with the was_empty flag distinguishing true zero from filled
     zero. The filter makes empty cells actually exist."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     week = F.floor(F.unix_timestamp("ts") / 604800).cast("long")
     wk = ev.select(week.alias("week")).distinct()
@@ -2339,7 +2314,6 @@ def event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     window on the (user_id, event_type) composite, integer-seconds
     comparison, deterministic event_id tiebreak for same-second
     events."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
     t = F.unix_timestamp("ts")
@@ -2389,7 +2363,6 @@ def session_duration_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     session collapse on ONE user key), then a 6-number scalar gather.
     Durations are exact integer seconds; only the interpolated
     percentiles and means are floats, rounded."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     t = F.unix_timestamp("ts")
@@ -2450,7 +2423,6 @@ def top_movers(spark: SparkSession, sf_dir: str) -> DataFrame:
     absolute move is usually the right severity anyway). Keyed agg +
     keyed lag as before; the global K-cut is a TakeOrderedAndProject
     over the |types|x|weeks| table with full deterministic tiebreaks."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(
         "event_type",
@@ -2502,7 +2474,6 @@ def concurrent_intervals_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar table (pmod-constant window, the `cumulative_unique_users`
     idiom). Peak concurrency, capacity planning, license counting — all
     the same sweep. Pure integer arithmetic end-to-end."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     d0 = F.floor(F.unix_timestamp("o_orderdate") / 86400).cast("long")
     iv = o.select(d0.alias("d0"), (d0 + OPEN_WINDOW_D).alias("d1"))
@@ -2643,7 +2614,6 @@ def running_compound_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt/first_cnt) holds mathematically and is the property test; the
     log form is what generalizes to ratios that don't telescope
     (per-period rebalanced returns)."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(
         "event_type",
@@ -2696,7 +2666,6 @@ def new_vs_returning_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     first-seen MIN, and the join share it); the final day collapse is
     the only other exchange. Counts are exact integers; the share is
     one division."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     act = ev.select(
         "user_id",
@@ -2743,7 +2712,6 @@ def frequency_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     product semantics); unlike `event_debounce`'s gap rule, the budget
     is per calendar window. Deterministic (ts, event_id) tiebreaks;
     the week boundary is a tz-free integer."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     week = F.floor(F.unix_timestamp("ts") / 604800).cast("long")
     w = W.partitionBy("user_id", "event_type", week.alias("wk")).orderBy(
@@ -2792,7 +2760,6 @@ def churn_risk_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     One user-keyed agg + a 1-row max broadcast; integer day arithmetic
     end-to-end. The flag feeds win-back campaigns; the idle-days column
     feeds the survival curves next door."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     t = F.unix_timestamp("ts")
     m = ev.agg(F.max(t).alias("t_max"))
@@ -2846,7 +2813,6 @@ def monotonicity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     inversion count
     per producer is the reorder-buffer sizing input for the streaming
     jobs next door (watermark delay ≈ max observed disorder)."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     seq = F.col("event_id") + F.when(F.col("event_id") % 97 == 0, 500).otherwise(0)
     t = F.unix_timestamp("ts")
@@ -2889,7 +2855,6 @@ def share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-keyed window sums over the COLLAPSED cell table (never
     the corpus), no self-joins back to totals; both marginals ride the
     |types|x|weeks| table. Integer counts, two exact divisions."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     wk = ev.groupBy(
         "event_type",
@@ -2944,7 +2909,6 @@ def trimmed_mean_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     landing exactly on a data value could flip a boundary row's
     inclusion) and the rounded cuts are emitted so the filter boundary
     itself is value-checked."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     cuts = ev.groupBy("event_type").agg(
         F.round(F.expr(f"percentile(value, {TRIM_PCT})"), 6).alias("lo"),
@@ -2988,7 +2952,6 @@ def peak_activity_cell(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid instead of raw rows). No window, no broadcast, no join; the
     grid is ≤ 7×24 cells per type so the second agg is bounded at any
     corpus size."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     cells = ev.groupBy(
         "event_type",
@@ -3036,7 +2999,6 @@ def rolling_distinct_users_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     HLL sketches of `hll_sketch_rollup` and the shape is unchanged. The
     oracle keeps only observed days (the engine's explode is bounded to
     the days table by a semi join)."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     ud = ev.select(
         "user_id",
@@ -3147,7 +3109,6 @@ def covisitation_timebound(spark: SparkSession, sf_dir: str) -> DataFrame:
     per 30-min of any one user, and the final pair aggregate is
     combine-friendly. The item pair is oriented (item_a < item_b) so each
     unordered event pair lands exactly once."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.get_json_object("props", "$.k").cast("long").alias("item"),
@@ -3310,7 +3271,6 @@ def funnel_step_deadlines(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the events table is scanned once per step with the type
     filter pushed down, and everything after the first agg is
     |users|-sized."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_timestamp("ts").alias("sec")
     )
@@ -3518,7 +3478,6 @@ def daily_crosscorr_lags(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens once per lag over sums that are all exactly representable,
     with both engines evaluating the identical expression. At 100 TB the
     only data-sized work is the two initial aggregates."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events").select(
         "event_type", (F.unix_timestamp("ts") / 86400).cast("long").alias("day")
     )
@@ -3633,7 +3592,6 @@ def revenue_changepoint_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties cannot flap. The day series is bounded (|days| rows), so the
     prefix window runs on the collapsed table — the fact scan does one
     keyed day aggregate and is done."""
-    _utc(spark)
     d = (
         load_table(spark, sf_dir, "orders")
         .groupBy(
@@ -3797,7 +3755,6 @@ def inventory_fifo_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     fanout is data-bounded and the whole plan is two keyed windows +
     one keyed join + keyed aggregates — shuffle count stays constant
     at any corpus size."""
-    _utc(spark)
     base = load_table(spark, sf_dir, "lineitem").select(
         "l_partkey",
         F.col("l_linestatus").alias("st"),
@@ -4021,7 +3978,6 @@ def dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     duplicated."""
     from .dedup import h60_spark
 
-    _utc(spark)
     g = (
         load_table(spark, sf_dir, "events")
         .groupBy(
@@ -4095,7 +4051,6 @@ def sequence_regex_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     window), then in-row regex — per-user work linear in history, the
     string bounded by per-user event counts; at 100 TB the monthly
     partition bound on history length is the only knob."""
-    _utc(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.struct(
@@ -4180,7 +4135,6 @@ def survival_nelson_aalen(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical before the single ROUND. Same plan shape as KM: two
     keyed aggs, pmod windows over the bounded day table, one 1-row
     observation-end broadcast."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     u = ev.groupBy("user_id").agg(
         F.min(F.unix_timestamp("ts")).alias("first_s"),
@@ -4690,9 +4644,6 @@ def burstiness_interevent(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one keyed window + one keyed agg — shuffle ~ the
     events table on user_id, the partition key sessionization already
     uses."""
-    from .relational import _utc
-
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         F.expr("CAST(FLOOR(unix_timestamp(ts)) AS BIGINT)").alias("sec"),
@@ -4969,7 +4920,6 @@ def dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded 6. The DuckDB oracle computes the same quantities the naive
     way (day×presence band join + COUNT DISTINCT), so hash equality
     proves the island algebra, not just the plumbing."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.select(
         "user_id",
@@ -5117,7 +5067,6 @@ def acf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     filled off the calendar grid, lags by a 7-way explode joined back
     KEYED on day+lag (no window per lag, no cartesian); mean/den are
     1-row scalar broadcasts. Scales as O(days) after the first rollup."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     cents = (
         ev.filter(F.col("event_type") == "purchase")
@@ -5232,7 +5181,6 @@ def spearman_corr_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Constant-variance groups emit 0 by the guard. Plan: one keyed
     rollup to |customers|, two nation-keyed windows, one keyed rollup
     to |nations| — no global sort, no unpartitioned window."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -5340,7 +5288,6 @@ def herfindahl_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     row self-verifying. Plan: two keyed rollups (|customers| then
     |nations|), zero windows, zero broadcasts — scan-bound at any
     scale."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey"
     )
@@ -5472,7 +5419,6 @@ def hampel_outlier_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Replaced series ships in DOUBLED cents (replaced2) to stay
     integer. At 100 TB the plan is two keyed rollups + two keyed
     7-fanout joins over the |nations|x|days| grid — calendar-bounded."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr(
@@ -5622,7 +5568,6 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid-sum, exact) — the hampel/spearman discipline; z is one shared
     IEEE expression over exact integers (emitted beside it), rounded 6.
     The variance ships as var18 = 18*Var(S) to stay integer."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     cents = o.groupBy(
         F.expr(
@@ -5748,7 +5693,6 @@ def xyz_variability_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a deployment sets its own cuts. The reported cv is one correctly-rounded
     SQRT + division over the emitted exact integers, rounded 6. Plan:
     two keyed rollups + a 1-row broadcast — scan-bound at 100 TB."""
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wk = li.groupBy(
         F.col("l_partkey").alias("partkey"),
@@ -5847,7 +5791,6 @@ def slo_burn_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     move), gap hours zero-filled off the calendar grid. Plan: one hour
     rollup + one keyed 6-fanout join over the HOUR-BOUNDED grid —
     calendar-bounded at any data scale."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     h = ev.groupBy(
         F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("hour")
@@ -5987,7 +5930,6 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     up to micro-rounding. Plan per pair: one contingency rollup
     (localCheckpoint'ed, the X73 move), marginals broadcast back, one
     1-row reduce; three pairs union to a 3-row table."""
-    _utc(spark)
 
     def one_pair(df: DataFrame, a: str, b: str, label: str) -> DataFrame:
         o = tracked_checkpoint(
@@ -6142,7 +6084,6 @@ def growth_accounting_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     division of emitted integers. Calendar-bounded week grid zero-
     fills silent weeks. At 100 TB: presence dedup is the one
     data-sized shuffle; everything after is |users x weeks| keyed."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     p = ev.select(
         "user_id",
@@ -6292,7 +6233,6 @@ def metric_change_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup to |nations| x 2, a 1-row totals broadcast, and a rank
     window over the 25-row segment table (pmod-bounded). The dimension
     generalizes: any categorical column slots into the same plan."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr(
@@ -6408,7 +6348,6 @@ def event_lateness_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     global window — hash equality proves the block decomposition."""
     from .dedup import h60_spark
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         F.expr("CAST(FLOOR(unix_timestamp(ts)) AS BIGINT)").alias("s"),
@@ -6512,7 +6451,6 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     totals broadcast — scan-bound; the generalization lattice search
     (coarsen bands until every class meets k) is a driver-side loop
     over re-parameterized runs of this same query."""
-    _utc(spark)
     c = load_table(spark, sf_dir, "customer")
     cls = c.groupBy(
         F.expr("c_nationkey DIV 5").alias("nation_grp"),
@@ -6615,7 +6553,6 @@ def price_volume_mix_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
     new, discontinued AND continuing SKUs (test-pinned); coarser
     dimensions (part, brand, nation) swap in by changing the rollup
     key."""
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem").select(
         (F.col("l_partkey") * 1000 + F.col("l_suppkey")).alias("sku"),
         F.expr(
@@ -6737,7 +6674,6 @@ def reorder_point_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tree per row (divisions + one correctly-rounded SQRT) over the
     emitted exact integers, rounded 6. Plan: two keyed rollups + a
     1-row week-count broadcast — scan-bound at any scale."""
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wk = li.groupBy(
         F.col("l_partkey").alias("partkey"),
@@ -6829,7 +6765,6 @@ def net_revenue_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     are exact BIGINT cents; the two ratios are single divisions,
     rounded 6). At 100 TB: one user-period rollup + one user-keyed
     lag join + one period rollup."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     m = (
         ev.filter(F.col("event_type") == "purchase")

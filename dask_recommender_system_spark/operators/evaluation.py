@@ -861,9 +861,7 @@ def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic on a single row — the minimal two-exchange plan at any
     fact size."""
     from ..data import load_table
-    from .relational import _utc
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -1195,9 +1193,7 @@ def causal_impact_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     dims broadcast into the fact scan, ONE day-keyed conditional agg,
     1-row fit broadcast, pmod window over |days| rows."""
     from ..data import load_table
-    from .relational import _utc
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
@@ -1315,9 +1311,7 @@ def ipw_ate_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     upgrade path (logistic per fine stratum) keeps the identical
     shape with more strata."""
     from ..data import load_table
-    from .relational import _utc
 
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_mktsegment"
@@ -1655,9 +1649,7 @@ def ab_sequential_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: one filtered scan → day-keyed counts; everything after
     is O(|days|)."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
@@ -1801,9 +1793,7 @@ def ratio_metric_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     randomization unit), one 2-row group rollup, scalar math — two
     exchanges at any scale."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     # per-user sufficient stats (user = randomization unit), then the
     # group rollup
@@ -1935,9 +1925,7 @@ def qini_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     established causal_impact discipline. Plan: one user rollup, one
     10-row decile rollup, a pmod window over 10 rows."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     hq = F.pmod(
         h60_spark(F.concat(F.lit("q:"), F.col("user_id").cast("string"))),
@@ -2109,9 +2097,7 @@ def permutation_test_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     a count. Null-true by construction (labels independent of value):
     the test gates p against degenerate extremes."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     u = (
         ev.filter(F.col("event_type") == "purchase")
@@ -2315,9 +2301,7 @@ def ab_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, rounded 6. Plan: one user rollup + one 1-row reduce —
     scan-bound; the midpoint is a 1-row broadcast."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     span = ev.agg(
         F.expr(

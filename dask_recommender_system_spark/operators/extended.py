@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..data import load_table
 from ..registry import query
-from .relational import ORACLE_EPOCH, _utc
+from .relational import ORACLE_EPOCH
 
 # ---------------------------------------------------------------------------
 # Joins: as-of, range/band, EXISTS
@@ -123,7 +123,6 @@ def join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     property-tested against a brute-force replica in
     tests/test_properties.py. The oracle uses the inequality-join +
     row_number form DuckDB can afford at sf0.01."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_epoch")
     )
@@ -634,7 +633,6 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- as-of direction variants (X93, X94) ----------------------------------
 def _asof_inputs(spark: SparkSession, sf_dir: str):
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_epoch")
     )
@@ -679,7 +677,6 @@ def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     row itself. One shuffle on the join key, linear in |L|+|R|; ties at
     the next date break to max orderkey like the backward twin. gap_days
     is exact integer arithmetic."""
-    _utc(spark)
     od = load_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         F.col("o_custkey").alias("user_id"),
@@ -847,7 +844,6 @@ def attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     running-last window stays linear where the oracle's inequality join
     is Σ_user |touch_u|·|conv_u|. Ties (same second) break to max
     event_id."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", F.unix_timestamp("ts").alias("ts_s")
     )
@@ -1315,7 +1311,6 @@ def date_functions_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     leave as epoch/integer so the comparison is session-tz-proof; Spark's
     Sunday-based dayofweek is converted to ISO (Monday=1) to match the
     ISO standard DuckDB follows. Narrow, zero-shuffle, codegen."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 11 == 0)
     d = F.col("o_orderdate")
     return o.select(
@@ -1559,7 +1554,6 @@ def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     past tolerance, and a 0/1 freshness flag ships for monitoring. The
     inner-match row set equals join_asof's; only staleness gates the
     payload."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_epoch")
     )
@@ -1945,7 +1939,6 @@ def date_format_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zero-padding and century handling are where dialects silently
     differ; three formats cover ISO, path-label, and EU conventions.
     Narrow, zero shuffle."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 23 == 0)
     d = F.col("o_orderdate")
     return o.select(
@@ -2563,7 +2556,6 @@ def attribution_position_based(spark: SparkSession, sf_dir: str) -> DataFrame:
     window-bounded), then ONE conversion-keyed ranking window — the
     join and windows all key on user/conversion, so the plan shards at
     any event volume."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     conv = ev.filter(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("conv_id"),
@@ -2674,9 +2666,6 @@ def attribution_time_decay(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversions, the asof family's cost envelope, linear after the
     user shuffle at 100 TB). Exponent is integer DIV on epoch
     seconds."""
-    from .relational import _utc
-
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "user_id",

@@ -384,10 +384,7 @@ def udtf_order_milestones(spark: SparkSession, sf_dir: str) -> DataFrame:
     fast path for anything expressible in SQL."""
     from pyspark.sql.functions import udtf
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.execution.pythonUDTF.arrow.enabled", "true")
-
-    @udtf(returnType="k long, due_day long, tranche_cents long")
+    @udtf(returnType="k long, due_day long, tranche_cents long", useArrow=True)
     class Milestones:
         def eval(self, day0: int, cents: int):
             t1 = cents * 5 // 10
@@ -466,9 +463,8 @@ def hysteresis_alert_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     determinism is structural; the oracle is a recursive CTE stepping
     rn → rn+1. Deterministic user subset bounds the output; order is
     total via (sec, event_id)."""
-    _ = spark
     ev = (
-        load_table_events(spark, sf_dir)
+        load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") % 10 == 0)
         .select(
             "user_id",
@@ -495,14 +491,6 @@ def hysteresis_alert_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     return ev.groupBy("user_id").applyInPandas(hyst, schema=HYST_SCHEMA)
-
-
-def load_table_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events via the footer-sniffing loader with a UTC session pin —
-    epoch projections must be engine-stable (the X256 oracle floors
-    epoch seconds)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    return load_table(spark, sf_dir, "events")
 
 
 HOLT_ALPHA, HOLT_BETA = 0.5, 0.25  # dyadic: exact in binary floating point
@@ -574,9 +562,6 @@ def holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles. At scale: |nations| bounds the group count here; for
     millions of series the same plan shards perfectly (hash shuffle on
     key, O(len) work per series)."""
-    from .relational import _utc
-
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr(
@@ -686,7 +671,7 @@ def rate_limit_token_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     ticks + 1 (the bucket's defining throughput bound). The streaming
     twin is applyInPandasWithState with (tokens, tick) as the one
     struct of state — stream_hysteresis_alerts' shape."""
-    ev = load_table_events(spark, sf_dir).select(
+    ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("event_id").cast("long").alias("event_id"),
         F.expr("CAST(FLOOR(unix_timestamp(ts)) AS BIGINT)").alias("sec"),
@@ -807,9 +792,6 @@ def bin_pack_next_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds bins used < 2x optimal. At 100 TB: parallelism = number of
     partitions (keys are spread hash-uniformly); per-key work linear in
     their orders."""
-    from .relational import _utc
-
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_custkey").cast("long").alias("custkey"),
         F.col("o_orderkey").cast("long").alias("orderkey"),
@@ -957,9 +939,6 @@ def holt_winters_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     bits and the output ships UNROUNDED doubles (level, trend, all 7
     seasonal slots). Init: l=y_0, b=0, s=0 (documented spec; t=0 does
     no seasonal update). At 100 TB parallelism = number of series."""
-    from .relational import _utc
-
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.expr(
@@ -1100,9 +1079,6 @@ def queue_lindley_wait(spark: SparkSession, sf_dir: str) -> DataFrame:
     never reorders), busy periods exist on the fixture AND idle resets
     occur (both branches of the max fire), and utilization < 1 so the
     queue is stable. At 100 TB parallelism = number of servers."""
-    from .relational import _utc
-
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey",
         F.col("o_orderkey").cast("long").alias("orderkey"),

@@ -21,16 +21,10 @@ from ..registry import query
 IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
 
 # Epoch-seconds projection of a timestamp, identical on both engines.
-# Spark: unix_timestamp(ts) (bigint, truncates sub-seconds; instants are
-# session-TZ-independent once the session TZ is pinned — see _utc()).
+# Spark: unix_timestamp(ts) (bigint, truncates sub-seconds; every query runs
+# in a UTC session, pinned where it enters — registry.releasing).
 # DuckDB: CAST(FLOOR(epoch(ts)) AS BIGINT) (epoch() returns fractional DOUBLE).
 ORACLE_EPOCH = "CAST(FLOOR(epoch({col})) AS BIGINT)"
-
-
-def _utc(spark: SparkSession) -> None:
-    """Pin session TZ so timestamp→epoch projections are engine-stable even
-    when the caller's session was built without UTC."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 def _epoch(col: str) -> F.Column:
@@ -172,7 +166,6 @@ def etl_jsonl_to_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     §3.3 honorable mention): JSONL scan → 4-column projection → positional
     rename → header-less CSV sink — then read back through the S1 scanner
     to prove the round trip. One linear pipeline, no shuffle."""
-    _utc(spark)
     jsonl_path = f"{IO_DIR}/etl_orders_jsonl"
     csv_path = f"{IO_DIR}/etl_ratings_csv"
     load_table(spark, sf_dir, "orders").write.mode("overwrite").json(jsonl_path)
@@ -246,7 +239,6 @@ def sink_parquet_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     all pruning. TIMESTAMP_MICROS is set for the write so every row group
     gets real ts min/max (measured at sf0.1: the week band then touches
     3/8 row groups instead of 8/8 — see SCALE.md)."""
-    _utc(spark)
     path = f"{IO_DIR}/events_sorted_parquet"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "ts", "event_type", "value"
@@ -386,7 +378,6 @@ def parse_logs_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     extract, pinning that predicates compose with parsed columns. The
     streaming twin `stream_parse_logs` replays the same lines through
     readStream with the same parse expressions and the same oracle."""
-    _utc(spark)
     path = write_log_lines(spark, sf_dir)
     return parse_log_lines(spark.read.text(path))
 
@@ -546,7 +537,6 @@ def dedup_full_row(spark: SparkSession, sf_dir: str) -> DataFrame:
     Doubled input proves rows actually collapse. At scale this is a
     hash-partitioned HashAggregate on all columns — map-side partial
     aggregation halves the shuffle for duplicate-heavy inputs."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.unionAll(ev)
@@ -581,7 +571,6 @@ def dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     first; the window form shuffles once on the group key and sorts only
     within partitions — no global sort at 100 TB. interaction_id breaks
     timestamp ties deterministically."""
-    _utc(spark)
     r = ratings_cached(spark, sf_dir)
     w = W.partitionBy("user_id", "item_id").orderBy(
         F.col("ts").desc(), F.col("interaction_id").desc()
@@ -606,7 +595,6 @@ def sort_by_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's orderBy range-partitions (sampled boundaries) so the sort is
     distributed; the explicit ``pos`` column makes order observable under
     the driver's order-insensitive hash. event_id breaks ties."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     # pmod(id, 1) ≡ 0 but is not constant-foldable: the window stays
     # partitioned (one group over the 100 limited rows — bounded) and the
@@ -1178,7 +1166,6 @@ def string_date_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch ordering (SURVEY.md §2.8) — declared to pin the capability the
     engine inherits from Spark; all JVM-side codegen, no shuffle. Dates
     leave as epoch-seconds BIGINT so the comparison is session-TZ-proof."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 7 == 0)
     return o.select(
         "o_orderkey",
@@ -1328,7 +1315,6 @@ def sink_parquet_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _write_zorder_layout(spark: SparkSession, sf_dir: str) -> str:
     """The Z-order write shared by sink_parquet_zorder (read-back oracle)
     and scan_manifest_pruned (file-skipping consumer)."""
-    _utc(spark)
     path = f"{IO_DIR}/events_zorder_parquet"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
@@ -1492,7 +1478,6 @@ def sink_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     like the Z-order relayout. File counts before/after are asserted in
     tests/test_plans.py, not emitted (layout is physical, not part of the
     declared result)."""
-    _utc(spark)
     landing = f"{IO_DIR}/events_landing_small"
     compacted = f"{IO_DIR}/events_compacted"
     ev = load_table(spark, sf_dir, "events").select(
@@ -1536,7 +1521,6 @@ def schema_evolution_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic so the oracle reproduces exactly which rows lost the
     column; schema_v tags provenance. NULL event_type stays a string
     column → pandas object, hash-stable (no float64 NaN trap)."""
-    _utc(spark)
     base = f"{IO_DIR}/events_schema_evo"
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", F.unix_timestamp("ts").alias("ts_s"), "event_type"
@@ -1708,7 +1692,6 @@ def sql_interface_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     date filter, single hash aggregate; asserted in tests). DataFrame
     and SQL compile to the same plans — the DataFrame operators
     elsewhere in the registry are a choice, not a constraint."""
-    _utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(TPCH_Q1)
 
@@ -1890,7 +1873,6 @@ def sql_interface_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     `weighted_sample_topk` trap. The date leaves as a yyyymmdd integer
     built from YEAR/MONTH/DAY — the epoch() spelling is DuckDB-only and
     would break the run-verbatim-on-both-engines contract."""
-    _utc(spark)
     for t in ("customer", "orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q3)
@@ -1934,7 +1916,6 @@ def sql_interface_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the classic cycle in the join graph that defeats naive left-deep
     planners. At 100 TB the pruned dims are KB-to-MB scale (broadcast),
     so the plan reads the two fact tables exactly once each."""
-    _utc(spark)
     for t in ("customer", "orders", "lineitem", "supplier", "nation", "region"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q5)
@@ -2017,7 +1998,6 @@ def generate_date_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     weekend and month-end flags — over a leap year so Feb-29 and the
     366th day pin the calendar edge cases. Narrow generation, no input
     scan at all."""
-    _utc(spark)
     start = F.lit(DATE_DIM_START).cast("date")
     days = spark.range(1).select(
         F.explode(
@@ -2114,7 +2094,6 @@ def sql_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     one plan and |outer| plans at scale. Same text runs on DuckDB (its
     LATERAL is the same ANSI feature) — the third member of the
     run-verbatim SQL family after Q1/Q3."""
-    _utc(spark)
     for t in ("region", "nation", "customer"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(LATERAL_SQL)
@@ -2250,7 +2229,6 @@ def hierarchy_closure_recursive(spark: SparkSession, sf_dir: str) -> DataFrame:
     one parent-keyed equi-join — the same frontier-join shape
     `graph_bfs_levels` builds by hand for graphs, where UNION ALL would
     instead count paths."""
-    _utc(spark)
     load_table(spark, sf_dir, "region").createOrReplaceTempView("region")
     load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
     load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
@@ -2278,7 +2256,6 @@ def corpus_jsonl_gz_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition); for splittable compressed text land on zstd parquet
     instead (`sink_parquet_zstd`) and keep .jsonl.gz for the interchange
     boundary only."""
-    _utc(spark)
     path = f"{IO_DIR}/corpus_jsonl_gz"
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source"
@@ -2334,7 +2311,6 @@ def sql_interface_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot flap. At 100 TB the semi-join build side is the handful of
     jumbo orders — KBs — so lineitem is read exactly twice (rollup +
     detail), both scans column-pruned to 2-3 columns."""
-    _utc(spark)
     for t in ("customer", "orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q18)
@@ -2384,7 +2360,6 @@ def sql_interface_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines; ORDER BY is total so no tiebreak is needed. At 100 TB
     both nation broadcasts are KBs and lineitem⋈orders remains the
     single data-sized shuffle — Q5's shape with a doubled dim."""
-    _utc(spark)
     for t in ("supplier", "lineitem", "orders", "customer", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q7)
@@ -2431,7 +2406,6 @@ def sql_interface_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounded float output, the weighted_sample_topk trap). Same ANSI
     text on DuckDB; money leaves as integer cents / one final rounded
     division."""
-    _utc(spark)
     for t in ("customer", "orders", "lineitem", "nation"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q10)
@@ -2467,7 +2441,6 @@ def sql_interface_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the naive reading) would be O(|orders|·|lineitem|). The quarter
     filter pushes into the orders scan before the semi join. Integer
     counts only — zero float surface. Same ANSI text on DuckDB."""
-    _utc(spark)
     for t in ("orders", "lineitem"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q4)
@@ -2511,7 +2484,6 @@ def sql_interface_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     share one shuffle (same key), the second rollup is KBs. The spec's
     comment NOT LIKE '%special%requests%' maps to the fixture's
     priority column (orders has no comment column; TESTDATA.md)."""
-    _utc(spark)
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q13)
@@ -2554,7 +2526,6 @@ def sql_interface_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle checks the division AND its inputs. Single-row output.
     At 100 TB: one column-pruned fact scan, one broadcast, no shuffle
     beyond the final 1-row gather — scan-dominated by design."""
-    _utc(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q14)
@@ -2597,7 +2568,6 @@ def sql_interface_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     locality is everything: predicate + projection pushdown make it
     IO-bound on ~4 columns, and the aggregate is map-side-partial to
     one row."""
-    _utc(spark)
     load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(TPCH_Q6)
 
@@ -2642,7 +2612,6 @@ def sql_interface_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     certifies OUR plan, values certify both). At 100 TB the derived
     pushdowns are what keep this scan-bound: without them the join
     reads every part row for three brands' worth of matches."""
-    _utc(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q19)
@@ -2692,7 +2661,6 @@ def sql_interface_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-part aggregate is the second scan of lineitem (column-
     pruned to two columns) and the join is keyed on partkey — the
     plan the rewrite exists to guarantee."""
-    _utc(spark)
     for t in ("lineitem", "part"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q17)
@@ -2753,7 +2721,6 @@ def sql_interface_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted, so the oracle checks the inputs AND the division. At
     100 TB this is the query where dim broadcast ordering decides
     whether you read 100 TB once or shuffle it three times."""
-    _utc(spark)
     for t in (
         "part", "supplier", "lineitem", "orders", "customer", "nation",
         "region",
@@ -2811,7 +2778,6 @@ def sql_interface_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     average broadcasts, the anti-join is keyed on custkey, and orders
     is scanned once with the priority filter — the same two-exchange
     budget as the rest of the series."""
-    _utc(spark)
     for t in ("customer", "orders"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q22)
@@ -2859,7 +2825,6 @@ def sql_interface_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary) costs a second column-pruned scan, which the docstring
     flags as the known trade — materializing the CTE via cache() is
     the documented manual override when the scan dominates."""
-    _utc(spark)
     for t in ("lineitem", "supplier"):
         load_table(spark, sf_dir, t).createOrReplaceTempView(t)
     return spark.sql(TPCH_Q15)
@@ -2890,7 +2855,6 @@ def sink_jsonl_gzip(spark: SparkSession, sf_dir: str) -> DataFrame:
     writer controls read parallelism via files written (partition
     count) — documented as the operational knob; parquet remains the
     analytics-native sink (S6), this is the EXPORT path."""
-    _utc(spark)
     agg = (
         load_table(spark, sf_dir, "customer")
         .groupBy(F.col("c_mktsegment").alias("segment"))

@@ -472,9 +472,6 @@ def user_segment_bitmaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression over it — the point of the structure. The oracle
     rebuilds the same words in DuckDB (identical shift
     semantics for shifts <= 62)."""
-    from .relational import _utc
-
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     seg = ev.groupBy("user_id").agg(
         F.max(
@@ -653,9 +650,7 @@ def bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the cost of one probe-side scan — the operational answer to
     'is M big enough for this build side'."""
     from .dedup import h60_spark
-    from .relational import _utc
 
-    _utc(spark)
     build = (
         load_table(spark, sf_dir, "orders")
         .filter(

@@ -2072,10 +2072,8 @@ def text_boilerplate_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold — high-df shingles are few by Zipf), and the per-doc
     rollup is keyed. At 100 TB every shuffle is on shingle or doc_id;
     the 1%-df set is the only broadcast and shrinks as N grows."""
-    from .relational import _utc
     from .dedup import shingles
 
-    _utc(spark)
     d = load_table(spark, sf_dir, "documents")
     sh = shingles(d).select("doc_id", F.col("s"))
     n = sh.agg(

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
-from .relational import ORACLE_EPOCH, _utc
+from .relational import ORACLE_EPOCH
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
 
@@ -33,7 +33,6 @@ def window_events_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Structured Streaming windowed agg (same ``F.window`` semantics with
     a watermark; see streaming/windows.py). One shuffle on (window, type);
     at 100 TB pre-partitioning the stream by event_type removes it."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -63,7 +62,6 @@ def window_events_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6b: 1-hour windows sliding every 30 min — each event lands in
     exactly 2 windows; Spark plans this as an Expand (×2 rows) before the
     hash aggregate, which is also what the oracle's cross-join models."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"))
@@ -96,7 +94,6 @@ def sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sessionization: 30-min inactivity gap → new session, via lag + running
     sum (the standard batch pattern; streaming twin is session_window /
     applyInPandasWithState in streaming/). One shuffle on user_id."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     order = [F.col("ts"), F.col("event_id")]
     w = W.partitionBy("user_id").orderBy(*order)
@@ -145,7 +142,6 @@ def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     Window end = last event + gap, per Spark's definition. Timestamps are
     truncated to whole seconds on the Spark side so both engines compare
     gaps in the same precision."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.timestamp_seconds(F.unix_timestamp("ts")).alias("tss")
     )
@@ -591,7 +587,6 @@ def window_range_rolling(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak, unlike a ROWS frame). One shuffle on the partition key; the
     frame is evaluated by a sliding accumulator inside WindowExec, not a
     self-join — linear per partition at 100 TB."""
-    _utc(spark)
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_orderkey", "o_totalprice",
         F.unix_timestamp("o_orderdate").alias("t"),
@@ -692,7 +687,6 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute (promoting it from rows-only to a full value-checked verdict).
     The exact branch is verification-only; production keeps the sketch
     path, whose whole point is never rescanning the base data."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -750,7 +744,6 @@ def trend_linear_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-user / per-item trends at 100 TB (group key swaps, plan doesn't).
     Both engines compute REGR_SLOPE/REGR_INTERCEPT/CORR natively from
     identical second-truncated day offsets."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     x = (F.unix_timestamp("ts") - F.lit(TREND_EPOCH0)) / 86400.0
     d = ev.select("event_type", F.col("value").alias("y"), x.alias("x"))
@@ -989,7 +982,6 @@ def kll_quantile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the exact [p45, p55] envelope; est_p95 within [p90, max]) —
     the same exact-branch-for-verification-only discipline as
     `hll_sketch_rollup`."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
         "event_type", F.date_trunc("day", "ts").alias("day")
@@ -1147,9 +1139,8 @@ def gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup, then one user_id exchange that BOTH windows and the final agg
     share — nothing global. Days are tz-free
     integer day numbers (floor(epoch/86400)) — no calendar functions; the
-    only tz surface is the NTZ-parquet -> timestamp read, which `_utc`
-    pins like every other events query."""
-    _utc(spark)
+    only tz surface is the NTZ-parquet -> timestamp read, which runs in
+    the UTC session every query gets at entry (registry.releasing)."""
     ev = load_table(spark, sf_dir, "events")
     days = ev.select(
         "user_id",
@@ -1203,7 +1194,6 @@ def approx_percentile_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     `kll_quantile_rollup`: GK summaries are per-group one-shot, KLL
     sketches are MERGEABLE across rollup grains — both shapes exist for
     a reason."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     agged = ev.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -1265,7 +1255,6 @@ def rolling_trend_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline as `trend_linear_fit`: with x ~ 2x10^4 the slope's
     Sxx moment would cancel catastrophically and engines would diverge;
     with x in [0, 60] both compute identical doubles."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -1357,7 +1346,6 @@ def sketch_persist_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .relational import IO_DIR
 
-    _utc(spark)
     path = f"{IO_DIR}/hll_daily_sketches"
     ev = load_table(spark, sf_dir, "events")
     daily = ev.groupBy(
@@ -1472,7 +1460,6 @@ def events_since_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     user_id exchange; the second is sub-partitioned, not re-shuffled
     (epoch is derived per-user). Deterministic event_id tiebreaks
     throughout."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     t = F.unix_timestamp("ts")
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
@@ -1567,7 +1554,6 @@ def rolling_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily table partitioned by type; warm-up rows (fewer than 7
     baseline days) and zero-variance frames are excluded rather than
     emitting infinities."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -1622,7 +1608,6 @@ def weighted_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     no Arrow, no state), which is the right trade whenever k is small
     and fixed. Integer numerator, ONE division — deterministic; warm-up
     rows without a full window are excluded, not zero-padded."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events")
     d = ev.groupBy(
         "event_type",
@@ -1692,7 +1677,6 @@ def session_window_dynamic_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     (a long-gap event can hold the session open across several
     short-gap ones; the lag form is simply wrong here). Timestamps
     truncated to whole seconds pre-agg, per `session_window_native`."""
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
@@ -2116,7 +2100,6 @@ def countmin_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-key rollup the exact answer needs anyway."""
     from .dedup import h60_spark
 
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         F.col("user_id").cast("long").alias("uid"),
         F.col("event_type").alias("etype"),
@@ -2326,9 +2309,6 @@ def funnel_within_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer epoch seconds — no floats anywhere. At 100 TB the joins
     are user-keyed with window-banded fanout (the asof family's cost
     envelope); type prefilters cut each side before any shuffle."""
-    from .relational import _utc
-
-    _utc(spark)
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",
@@ -2472,9 +2452,6 @@ def team_draft_interleaving(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE. Everything is integer; the oracle replays the draft
     list-for-list. At 100 TB the only data-sized work is the two
     ranker rollups; the draft itself is O({TD_L}) on one row."""
-    from .relational import _utc
-
-    _utc(spark)
     r = ratings_cached(spark, sf_dir)
     pop = (
         r.groupBy("item_id")
@@ -2606,9 +2583,6 @@ def ranking_rbo_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup, a week-keyed rank window, a (week+1, item) equi-join, a
     10-way bounded depth explode — every shuffle keyed, top-k tables
     are |weeks| x k rows."""
-    from .relational import _utc
-
-    _utc(spark)
     li = load_table(spark, sf_dir, "lineitem")
     wk = li.groupBy(
         F.expr(
@@ -2745,9 +2719,6 @@ def cart_abandonment_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundaries are integer-second comparisons — no tz, no floats.
     Plan: two user-keyed windows + two keyed rollups; scales as the
     sessionizer does (the user shuffle dominates)."""
-    from .relational import _utc
-
-    _utc(spark)
     e = load_table(spark, sf_dir, "events").select(
         "user_id",
         "event_type",

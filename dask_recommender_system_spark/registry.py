@@ -15,6 +15,12 @@ Determinism rules (FIXTURES.md §6): every float output is ROUND(x, 6) on
 both sides; every ranking has a unique tiebreak column; no wall-clock, no
 unseeded randomness; timestamps leave the engine as epoch seconds BIGINT
 so session-timezone settings cannot skew the comparison.
+
+Time zone: every registered query runs in a UTC session. ``releasing``
+sets ``spark.sql.session.timeZone`` where each query enters, because a
+caller of ``__spark_entry__.queries()`` brings its own session, whose zone
+may be anything. Query code never sets it; ``session.get_spark`` builds
+UTC sessions for the tests and harnesses that call raw query functions.
 """
 
 from __future__ import annotations
@@ -43,13 +49,15 @@ REGISTRY: dict[str, Query] = {}
 def releasing(fn: QueryFn) -> QueryFn:
     """``fn`` that first releases the previous query's tracked checkpoints
     (models.common.QUERY_CHECKPOINTS), so a caller that runs queries one
-    after another holds at most one query's worth."""
+    after another holds at most one query's worth, and pins the session
+    time zone to UTC (see the module docstring)."""
 
     @functools.wraps(fn)
     def run(spark: SparkSession, sf_dir: str) -> DataFrame:
         from .models.common import release_query_checkpoints
 
         release_query_checkpoints()
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
         return fn(spark, sf_dir)
 
     return run

@@ -198,7 +198,6 @@ def stream_window_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6 streaming form: readStream(events) → watermark → tumbling agg →
     memory sink, drained synchronously; checked against the *batch* oracle
     so streaming and batch share one correctness definition."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     agg = tumbling_counts(read_events_stream(spark, sf_dir))
     return drain_stream(agg, "complete")
 
@@ -222,7 +221,6 @@ def stream_window_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X6b streaming form: the sliding-window agg through readStream +
     watermark, drained to a memory sink; same DuckDB oracle as the batch
     `window_events_sliding` — one correctness definition across modes."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     agg = sliding_counts(read_events_stream(spark, sf_dir))
     return drain_stream(agg, "complete")
 
@@ -248,7 +246,6 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result equals the batch DISTINCT — checked against a DuckDB oracle
     like every other dedup operator. Duplicates separated by more than the
     watermark re-emit; at 100 TB/day the watermark is the state-size knob."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir).select(
         "user_id",
         "event_type",
@@ -277,7 +274,6 @@ def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark passes its end, bounding per-user state on an unbounded
     stream. Complete output mode here so the bounded replay emits every
     session including the open tail, making the result oracle-comparable."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir).select(
         "user_id", F.timestamp_seconds(F.unix_timestamp("ts")).alias("tss")
     )
@@ -326,7 +322,6 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     definition across modes, like every stream twin here). At 100 TB/day
     the watermark delay is the state-size knob and the user_id equi-key
     is what partitions the join state."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def side(event_type: str, alias: str) -> DataFrame:
         ev = read_events_stream(spark, sf_dir)
@@ -373,7 +368,6 @@ def stream_parse_logs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shipper's bucket and this exact query runs forever."""
     from ..operators.relational import parse_log_lines, write_log_lines
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     path = write_log_lines(spark, sf_dir)
     parsed = parse_log_lines(spark.readStream.text(path))
     return drain_stream(parsed, "append")
@@ -404,7 +398,6 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..operators.relational import IO_DIR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     out_dir = f"{IO_DIR}/stream_fb_sink"
     shutil.rmtree(out_dir, ignore_errors=True)
     stream = read_events_stream(spark, sf_dir).select(
@@ -484,7 +477,6 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     promotion from rows-only that `hll_sketch_rollup` got."""
     from .stateful import apply_sessionization
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir).select(
         "user_id", F.unix_timestamp("ts").alias("ts_s")
     )
@@ -520,7 +512,6 @@ def stream_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     a replay of the stream."""
     from ..data import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -601,7 +592,6 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift definition across modes."""
     from ..operators.analytics import PSI_BIN_MAX, PSI_BIN_W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -683,7 +673,6 @@ def stream_topk_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     the leaderboard has one correctness definition across modes. At
     100 TB the cells table is what you persist; re-ranking with a
     different k is cell arithmetic, never an event replay."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     cells = (
         ev.withColumn("p", F.from_json("props", "k BIGINT"))
@@ -735,7 +724,6 @@ def stream_cdc_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..operators.relational import IO_DIR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     cdc_dir = f"{IO_DIR}/cdc_src"
     state_dir = f"{IO_DIR}/cdc_state"
     shutil.rmtree(cdc_dir, ignore_errors=True)
@@ -826,7 +814,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-bucket both sides. Oracle = the identical batch join."""
     from ..data import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     dim = load_table(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"),
         F.col("c_mktsegment").alias("segment"),
@@ -872,7 +859,6 @@ def stream_kll_quantile_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     simply don't have)."""
     from ..data import load_table
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "1 hour")
@@ -950,7 +936,6 @@ def stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table
     from ..operators.relational import IO_DIR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src_dir = f"{IO_DIR}/ckpt_src"
     out_dir = f"{IO_DIR}/ckpt_sink"
     ckpt_dir = f"{IO_DIR}/ckpt_state"
@@ -1039,7 +1024,6 @@ def stream_update_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..data import load_table, normalize_event_ts
     from ..operators.relational import IO_DIR
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     src_dir = f"{IO_DIR}/upd_src"
     shutil.rmtree(src_dir, ignore_errors=True)
     ev = load_table(spark, sf_dir, "events")
@@ -1095,7 +1079,6 @@ def stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     (awaitTermination, no manual stop); the per-type aggregate of
     everything it consumed must equal the batch oracle — nothing
     skipped, nothing duplicated, nothing waited for."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir)
     agg = stream.groupBy("event_type").agg(
         F.count("*").alias("n"),
@@ -1142,7 +1125,6 @@ def stream_daily_unique_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     second stateful stage for mergeable sketches. Matches the batch
     COUNT(DISTINCT) oracle exactly — the same one-correctness-definition
     rule every streaming twin follows."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir).select(
         "user_id",
         "ts",
@@ -1202,7 +1184,6 @@ def stream_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     flushes the expired state — the semantics this query pins against
     regressions. State scales like the inner join: user-keyed, evicted
     at WM past window end."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
 
     def side(event_type: str, alias: str) -> DataFrame:
         ev = read_events_stream(spark, sf_dir)
@@ -1256,7 +1237,6 @@ def stream_hysteresis_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     append-mode output equals the batch recurrence EXACTLY — it shares
     the batch twin's oracle verbatim, no closed-form adjustment (the
     strongest stream/batch parity in the streaming family)."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .stateful import apply_hysteresis
 
     ev = (
@@ -1306,7 +1286,6 @@ def stream_countmin_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.dedup import h60_spark
     from ..operators.windows import CM_D, CM_W
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     e4 = ev.withColumn(
         "j", F.explode(F.sequence(F.lit(0), F.lit(CM_D - 1)))
@@ -1359,7 +1338,6 @@ def stream_rate_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
     TWO-field state struct (the next rung up from the alert bit). No
     timers: unlike a session window the bucket state is meaningful
     forever; at 100 TB state is two longs per active user."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .stateful import apply_token_bucket
 
     ev = read_events_stream(spark, sf_dir).select(
@@ -1391,7 +1369,6 @@ def stream_bin_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shares its recursive-CTE oracle VERBATIM — token-bucket-grade
     parity for a 2-field packing state. At 100 TB: state is two longs
     per active customer."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .stateful import apply_bin_pack
 
     src = f"{sf_dir}/orders.parquet"
@@ -1470,7 +1447,6 @@ def stream_dau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     DAU for every day whose end <= max(ts) - 3600" (the
     stream_sessionize promotion move), which is exactly the DuckDB
     oracle: a full value verdict, not rows-only."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     stream = read_events_stream(spark, sf_dir).select(
         "user_id",
         "ts",
@@ -1541,7 +1517,6 @@ def stream_slo_burn(spark: SparkSession, sf_dir: str) -> DataFrame:
     those hours: a full value verdict. Burn-rate floats are omitted
     here (the batch twin reports them); alerts are pure integers.
     At 100 TB: streaming state is two longs per open hour."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     ev = read_events_stream(spark, sf_dir)
     hourly = (
         ev.withWatermark("ts", "1 hour")
@@ -1623,7 +1598,6 @@ def stream_queue_lindley(spark: SparkSession, sf_dir: str) -> DataFrame:
     the drained output equals the batch recurrence and shares its
     recursive-CTE oracle VERBATIM. At 100 TB: three longs of state per
     active server."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .stateful import apply_lindley
     from ..data import load_table
     from ..operators.grouped import QL_REPLAY, QL_SVC_S
@@ -1752,7 +1726,6 @@ def stream_cart_abandonment(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rollup — gets a full value verdict against the batch oracle.
     State per user: six longs/ints. At 100 TB the event-time timer
     bounds state to watermark-active users."""
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     from .stateful import apply_sessionization_outcomes
 
     ev = read_events_stream(spark, sf_dir).select(

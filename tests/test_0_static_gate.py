@@ -1,7 +1,7 @@
 """Static gate: catches name and import breakage before any Spark test runs.
 
 Stdlib only, no SparkSession; the file name sorts first under
-``pytest tests/``. Six checks over every module of the package and every
+``pytest tests/``. Seven checks over every module of the package and every
 harness script (``bench.py``, ``correctness_local.py``,
 ``__spark_entry__.py``, ``tools/*.py``, loaded by path, since no test
 imports them):
@@ -18,7 +18,9 @@ imports them):
 5. ``spark_partition_id`` appears in the package only inside
    ``models.common.block_offsets``;
 6. ``.localCheckpoint(`` is called only in ``models.common``, and no
-   ``release_checkpoint(`` sits in a loop body under ``operators``.
+   ``release_checkpoint(`` sits in a loop body under ``operators``;
+7. the session time zone is set only in ``session`` and ``registry``, and
+   no session-wide Arrow UDTF flag is set.
 
 pyflakes and ruff would cover 2 and 3, but neither is a dependency here.
 """
@@ -347,3 +349,33 @@ def test_checkpoint_loops_go_through_iterate():
                     if isinstance(sub, ast.Call) and _callee(sub) == "release_checkpoint":
                         bad.add(f"{name}:{sub.lineno} release_checkpoint( in a loop")
     assert not bad, "hand-written checkpoint loops:\n" + "\n".join(sorted(bad))
+
+
+def test_session_time_zone_set_only_at_query_entry():
+    """Every query runs in UTC because ``registry.releasing`` pins the
+    session time zone where it enters; ``session.get_spark`` builds UTC
+    sessions for callers of raw query functions. A time-zone string
+    anywhere else, or a ``_utc`` name, is a by-hand pin. The Arrow UDTF
+    flag belongs on the ``@udtf`` itself (``useArrow=True``), not on the
+    session. Counts code and strings, not comments."""
+    homes = {f"{PKG.__name__}.session", f"{PKG.__name__}.registry"}
+    bad = []
+    for name, (_, _, tree, _) in MODULES.items():
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if "spark.sql.session.timeZone" in node.value and name not in homes:
+                    bad.append(f"{name}:{node.lineno} session.timeZone")
+                if "pythonUDTF.arrow.enabled" in node.value:
+                    bad.append(f"{name}:{node.lineno} pythonUDTF.arrow.enabled")
+            utc = (
+                (isinstance(node, ast.Name) and node.id == "_utc")
+                or (isinstance(node, ast.Attribute) and node.attr == "_utc")
+                or (isinstance(node, ast.alias) and node.name == "_utc")
+                or (
+                    isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef))
+                    and node.name == "_utc"
+                )
+            )
+            if utc:
+                bad.append(f"{name}:{node.lineno} _utc")
+    assert not bad, "time-zone or UDTF session settings outside their home:\n" + "\n".join(bad)

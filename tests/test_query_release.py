@@ -94,3 +94,19 @@ def test_check_builds_the_correctness_record(spark, sf_dir):
     failed = check(boom, con, q.name, q.oracle)
     assert failed["hash_match"] is None
     assert "Traceback" in failed["err"] and "query failed to build" in failed["err"]
+
+
+def test_entry_pins_utc_whatever_the_callers_zone(spark, sf_dir):
+    """A caller's session may not be UTC; ``registry.releasing`` sets it
+    where every query enters, so no query pins its own."""
+    con, qs, oracles = duckdb_con(sf_dir), E.queries(), E.oracle_sql()
+    tz = "spark.sql.session.timeZone"
+    try:
+        for name in ("funnel_conversion", "stream_window_tumbling"):
+            spark.conf.set(tz, "America/New_York")
+            df = qs[name](spark, sf_dir)
+            assert spark.conf.get(tz) == "UTC", name
+            rec = check(df.toPandas, con, name, oracles[name])
+            assert rec["hash_match"] is True, (name, rec)
+    finally:
+        spark.conf.set(tz, "UTC")

@@ -7,9 +7,10 @@ harness-environment divergence: the builder's sweeps run under
 first 50 entries of `queries()` (the window the external correctness check
 reads), or the queries named on the command line, through a deliberately
 plain, NON-UTC session and the dtype-strict comparator, writing a
-CORRECTNESS-format artifact — so any config-sensitive value (timezone,
-shuffle partitioning, Arrow behavior) and any operator that forgets to pin
-its own timezone surfaces before that check runs.
+CORRECTNESS-format artifact — so any config-sensitive value (shuffle
+partitioning, Arrow behavior, defaults `get_spark` overrides) surfaces
+before that check runs, and a query that escapes the UTC pin every query
+gets at entry (`registry.releasing`) shows as a timezone-shifted value.
 
     python tools/plain_session_replay.py                 # first 50, sf0.01
     python tools/plain_session_replay.py sql_interface_q13 sql_interface_q14
