@@ -200,16 +200,6 @@ NOISY_QUERIES = {
 # plan regressions. Kept terse — the summary line must stay under the
 # driver's ~2000-char tail capture.
 BENCH_NOTES = {
-    "join_predict_lookup": (
-        "r06 2.7x = md5 interaction_id fix (dece48c) re-deriving the "
-        "ratings view 3x/query; r07 reads derive-once data.ratings_cached"
-    ),
-    "recommend_top_k": "same md5 view-derivation tax; r07 uses ratings_cached",
-    "_r08": (
-        "caches are process-scoped now (no cross-run reuse); the shared "
-        "dedup+encode view is also derive-once (encoded_cache_ingest_s) — "
-        "drops in the linalg/eval families are the removed per-query prep"
-    ),
     "_r09": (
         "bench_total now ALSO counts the two ingest builds as timed keys "
         "(ratings_cache_ingest + encoded_cache_ingest, ~17s — VERDICT r08 "

@@ -179,7 +179,8 @@ def _ratings_fingerprint(sf_dir: str) -> str:
     return content_fingerprint(f"{sf_dir}/lineitem.parquet", f"{sf_dir}/orders.parquet")
 
 
-# Process-lifetime root for the materialized ratings view. A cross-run
+# Process-lifetime root for the materialized ratings view (and, under
+# io/, for the files queries write and read back). A cross-run
 # cache under a stable /tmp path (round 7) would let a later bench/oracle
 # invocation skip the derivation entirely — a persisted intermediate keyed
 # on the test data, which the optimization-round rules prohibit. Scoping

@@ -52,6 +52,50 @@ def shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     )
 
 
+def shingle_overlap(
+    sh: DataFrame, cand: DataFrame | None = None, pin: bool = True
+) -> DataFrame:
+    """(doc_a, doc_b, c, na, nb): c = |sh(a) ∩ sh(b)|, na and nb each
+    doc's shingle count, from (doc_id, s) rows with distinct shingles per
+    doc — the exact-verify stage of every candidates-then-verify dedup
+    here. With ``cand`` (doc_a, doc_b) it probes those pairs only: cand
+    joins doc_a's shingles (shuffle on doc_a), then doc_b's on
+    (doc_b, s), so the work is O(candidates × shingles/doc) and
+    zero-overlap pairs drop out of the inner join. Without ``cand`` it
+    self-joins on the shingle (doc_a < doc_b), quadratic in the worst
+    case and skewed on frequent shingles.
+
+    ``sh`` feeds both join sides and the size count, so by default it is
+    checkpointed once here (tracked for release when the next query
+    starts). ``pin=False`` is for a caller that pinned ``sh`` itself
+    because its own candidate build reads it too, or that keeps the job
+    count of an unpinned plan (dedup_containment, where the pin measured
+    two more jobs)."""
+    if pin:
+        from ..models.common import tracked_checkpoint
+
+        sh = tracked_checkpoint(sh)
+    a = sh.select(F.col("doc_id").alias("doc_a"), "s")
+    b = sh.select(F.col("doc_id").alias("doc_b"), "s")
+    if cand is None:
+        pairs = a.join(b, "s").filter(F.col("doc_a") < F.col("doc_b"))
+    else:
+        pairs = cand.join(a, "doc_a").join(b, ["doc_b", "s"])
+    n = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+    return (
+        pairs.groupBy("doc_a", "doc_b")
+        .agg(F.count("*").alias("c"))
+        .join(n.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
+        .join(n.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
+        .select("doc_a", "doc_b", "c", "na", "nb")
+    )
+
+
+def _jaccard() -> F.Column:
+    """|A∩B| / |A∪B| over shingle_overlap's columns."""
+    return F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
+
+
 @query(
     "dedup_exact",
     oracle="""
@@ -94,27 +138,14 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     → self-join on shingle → |A∩B| per pair → Jaccard from set sizes.
     This is the *verification* stage of MinHash/SimHash dedup; standalone
     it is quadratic in the worst case — the shingle join skews on frequent
-    shingles, which is exactly what the LSH variants below avoid at scale."""
+    shingles, which is exactly what the LSH variants below avoid at scale.
+    The overlap counts come from `shingle_overlap` without candidates."""
     d = spread(load_table(spark, sf_dir, "documents"))
-    sh = shingles(d).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    common = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("c"))
+    return (
+        shingle_overlap(shingles(d))
+        .filter(_jaccard() >= 0.2)
+        .select("doc_a", "doc_b", F.round(_jaccard(), 6).alias("jaccard"))
     )
-    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    out = (
-        common.join(sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")), "doc_a")
-        .join(sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")), "doc_b")
-        .filter(jac >= 0.2)
-        .select("doc_a", "doc_b", F.round(jac, 6).alias("jaccard"))
-    )
-    return out
 
 
 MINHASH_NH = 64  # signature width (Jaccard estimate ± ~0.06)
@@ -533,31 +564,12 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def exact_jaccard_on_pairs(docs: DataFrame, cand: DataFrame) -> DataFrame:
     """The LSH *verification* stage at its production scale shape: exact
-    3-gram Jaccard computed ONLY for candidate pairs. Work is
-    O(candidates × shingles/doc), not O(n²): candidates join doc_a's
-    shingles (shuffle on doc_a), then probe doc_b's shingles on
-    (doc_b, shingle) — zero-overlap candidates drop out of the inner join
-    (they cannot pass any positive threshold). Returns
-    (doc_a, doc_b, jaccard) unrounded."""
-    sh = shingles(docs).persist()
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a_sh = cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-    common = (
-        a_sh.join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-    )
-    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
+    3-gram Jaccard computed ONLY for candidate pairs, through
+    `shingle_overlap`'s candidate probe (O(candidates × shingles/doc), not
+    O(n²); zero-overlap candidates cannot pass any positive threshold and
+    drop out). Returns (doc_a, doc_b, jaccard) unrounded."""
+    return shingle_overlap(shingles(docs), cand).select(
+        "doc_a", "doc_b", _jaccard().alias("jaccard")
     )
 
 
@@ -882,40 +894,27 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag. Jaccard is symmetric and dilutes when sizes differ; containment
     is the measure that catches a document swallowed by a larger one.
     Pipeline: MinHash band candidates → exact common-shingle counts on
-    candidates only (O(cand × shingles/doc), the exact_jaccard machinery)
-    → per-pair division by each side's own shingle count. Everything
-    keyed, nothing all-pairs; the unconditional form is declared as
-    `dedup_containment_sweep` below."""
+    candidates only (`shingle_overlap`'s candidate probe, O(cand ×
+    shingles/doc)) → per-pair division by each side's own shingle count.
+    Everything keyed, nothing all-pairs; the unconditional form is
+    declared as `dedup_containment_sweep` below."""
     docs = spread(
         load_table(spark, sf_dir, "documents").filter(
             F.length(F.trim(F.col("text"))) > 0
         )
     )
     cand = minhash_candidates(minhash_signatures(docs))
-    sh = shingles(docs)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a_sh = cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-    common = (
-        a_sh.join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-    )
     c = F.col("c").cast("double")
-    jac = c / (F.col("na") + F.col("nb") - F.col("c"))
-    return common.filter(jac >= 0.5).select(
-        "doc_a",
-        "doc_b",
-        F.round(c / F.col("na"), 6).alias("contain_a_in_b"),
-        F.round(c / F.col("nb"), 6).alias("contain_b_in_a"),
-        (c / F.least("na", "nb") >= CONTAIN_T).cast("long").alias("is_contained"),
+    return (
+        shingle_overlap(shingles(docs), cand, pin=False)
+        .filter(_jaccard() >= 0.5)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.round(c / F.col("na"), 6).alias("contain_a_in_b"),
+            F.round(c / F.col("nb"), 6).alias("contain_b_in_a"),
+            (c / F.least("na", "nb") >= CONTAIN_T).cast("long").alias("is_contained"),
+        )
     )
 
 
@@ -977,14 +976,18 @@ def dedup_containment_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size instead of quadratic. Exact common-shingle counts (over
     ALL shingles, uncapped) then verify candidates only — the same
     candidates-then-verify shape as the MinHash ladder, with the index
-    replacing the signatures. Plan: keyed aggs + equi-joins throughout;
-    no corpus self-join on doc text, no cross join (plan-asserted)."""
+    replacing the signatures; `shingle_overlap` probes the candidates
+    over the same shingles the index reads, pinned once here. Plan: keyed
+    aggs + equi-joins throughout; no corpus self-join on doc text, no
+    cross join (plan-asserted)."""
+    from ..models.common import tracked_checkpoint
+
     docs = spread(
         load_table(spark, sf_dir, "documents").filter(
             F.length(F.trim(F.col("text"))) > 0
         )
     )
-    sh = shingles(docs).persist()
+    sh = tracked_checkpoint(shingles(docs))
     # inverted index restricted to discriminative shingles
     keep = (
         sh.groupBy("s")
@@ -1005,28 +1008,17 @@ def dedup_containment_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a_sh = cand.join(sh.select(F.col("doc_id").alias("doc_a"), "s"), "doc_a")
-    common = (
-        a_sh.join(sh.select(F.col("doc_id").alias("doc_b"), "s"), ["doc_b", "s"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na")),
-            "doc_a",
-        )
-        .join(
-            sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb")),
-            "doc_b",
-        )
-    )
     c = F.col("c").cast("double")
-    return common.filter(c / F.least("na", "nb") >= CONTAIN_T).select(
-        "doc_a",
-        "doc_b",
-        F.col("c").alias("n_common"),
-        F.round(c / F.col("na"), 6).alias("contain_a_in_b"),
-        F.round(c / F.col("nb"), 6).alias("contain_b_in_a"),
+    return (
+        shingle_overlap(sh, cand, pin=False)
+        .filter(c / F.least("na", "nb") >= CONTAIN_T)
+        .select(
+            "doc_a",
+            "doc_b",
+            F.col("c").alias("n_common"),
+            F.round(c / F.col("na"), 6).alias("contain_a_in_b"),
+            F.round(c / F.col("nb"), 6).alias("contain_b_in_a"),
+        )
     )
 
 
@@ -1165,6 +1157,78 @@ SNM_WINDOW = 5  # sorted-neighborhood width: candidates within w sort ranks
 SNM_KEY_LEN = 24
 
 
+def snm_candidates(docs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, rank_dist): sorted-neighborhood candidate pairs —
+    the docs sorted on the string (lowercased, trimmed {SNM_KEY_LEN}-char
+    text prefix) || '|' || (doc_id zero-padded to 20 digits), every pair
+    within {SNM_WINDOW} sort ranks, doc_a the lower rank, each pair once. The global rank comes from `encode_sorted_rank`
+    (a block-offset rank scan, no single-partition window); rank
+    adjacency becomes an EQUI join on rank buckets: each row lands in
+    buckets floor(rn/w) and floor(rn/w)+1, so two rows within w ranks
+    share a bucket, and exactly one shared bucket is the higher-ranked
+    row's first, floor(rn_b/w) — keeping only that one emits each pair
+    once without a distinct (one shuffle fewer)."""
+    from ..models.common import encode_sorted_rank, tracked_checkpoint
+
+    keyed = docs.select(
+        "doc_id",
+        F.concat_ws(
+            "|",
+            F.lower(F.substring(F.trim(F.col("text")), 1, SNM_KEY_LEN)),
+            # 20-char pad covers any BIGINT (ADVICE r08: lpad TRUNCATES
+            # past the width, so an 8-char pad silently corrupted doc_ids
+            # at >= 10^8 docs; same-length pads keep the order identical)
+            F.lpad(F.col("doc_id").cast("string"), 20, "0"),
+        ).alias("sortval"),
+    )
+    ranked = encode_sorted_rank(
+        keyed.select(F.col("sortval").alias("value")), "value", "rn"
+    )
+    # doc_id is embedded in sortval's zero-padded 20-char suffix (the
+    # uniqueness tiebreak) — parse it back instead of joining `keyed` on
+    # the full sort-key STRING (r08: that join shuffled the string column
+    # a second time and replayed the keyed projection; guide §2.3).
+    # Checkpoint: rk is the junction of TWO diamonds (the bucket frame
+    # self-joins, and cand feeds two consumers in each caller), so
+    # un-pinned it replayed the rank window + parse 4x. |docs| rows of
+    # two BIGINTs — one tiny materialization, tracked for registry-side
+    # release (ADVICE r08).
+    rk = tracked_checkpoint(
+        ranked.select(
+            F.substring(F.col("value"), -20, 20).cast("long").alias("doc_id"),
+            "rn",
+        )
+    )
+    b = rk.select(
+        "doc_id",
+        "rn",
+        F.explode(
+            F.array(
+                F.floor(F.col("rn") / SNM_WINDOW),
+                F.floor(F.col("rn") / SNM_WINDOW) + 1,
+            )
+        ).alias("bucket"),
+    )
+    cand = (
+        b.alias("a")
+        .join(b.alias("b"), "bucket")
+        .filter(
+            (F.col("b.rn") - F.col("a.rn") >= 1)
+            & (F.col("b.rn") - F.col("a.rn") <= SNM_WINDOW)
+            & (F.col("bucket") == F.floor(F.col("b.rn") / SNM_WINDOW))
+        )
+        .select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            (F.col("b.rn") - F.col("a.rn")).cast("long").alias("rank_dist"),
+        )
+    )
+    # cand feeds two consumers in both callers (the Jaccard verify and
+    # the rank_dist join; the candidate count and the truth join) —
+    # checkpoint the O(n·w)-row candidate set once (see rk above)
+    return tracked_checkpoint(cand)
+
+
 @query(
     "dedup_sorted_neighborhood",
     oracle=f"""
@@ -1203,74 +1267,16 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     banding (`dedup_minhash`): sort the corpus on a cheap domain key (a
     normalized text prefix), and candidates are pairs within
     {SNM_WINDOW} sort RANKS — O(n·w) candidates regardless of how skewed
-    any blocking key would be, SNM's defining advantage. The global rank
-    comes from `encode_sorted_rank` (a block-offset rank scan, no
-    single-partition window); rank adjacency becomes an EQUI join on
-    rank buckets (each row lands in 2 buckets, pairs dedup'd) and
-    survivors go through the SAME `exact_jaccard_on_pairs` verify as the
-    LSH ladder. Recall on this fixture is total (every true pair is
-    within rank distance 2 — measured); the honest caveat is that SNM
-    recall depends on the sort key clustering true pairs, which is why
-    production runs multi-pass SNM with different keys."""
-    from ..models.common import encode_sorted_rank, tracked_checkpoint
-
+    any blocking key would be, SNM's defining advantage. Candidates come
+    from `snm_candidates` (rank scan + rank-bucket equi-join) and go
+    through the SAME `exact_jaccard_on_pairs` verify as the LSH ladder;
+    rank_dist is joined back from the pinned candidate set. Recall on
+    this fixture is total (every true pair is within rank distance 2 —
+    measured); the honest caveat is that SNM recall depends on the sort
+    key clustering true pairs, which is why production runs multi-pass
+    SNM with different keys."""
     d = load_table(spark, sf_dir, "documents")
-    keyed = d.select(
-        "doc_id",
-        F.concat_ws(
-            "|",
-            F.lower(F.substring(F.trim(F.col("text")), 1, SNM_KEY_LEN)),
-            # 20-char pad covers any BIGINT (ADVICE r08: lpad TRUNCATES
-            # past the width, so an 8-char pad silently corrupted doc_ids
-            # at >= 10^8 docs; same-length pads keep the order identical)
-            F.lpad(F.col("doc_id").cast("string"), 20, "0"),
-        ).alias("sortval"),
-    )
-    ranked = encode_sorted_rank(
-        keyed.select(F.col("sortval").alias("value")), "value", "rn"
-    )
-    # doc_id is embedded in sortval's zero-padded 20-char suffix (the
-    # uniqueness tiebreak) — parse it back instead of joining `keyed` on
-    # the full sort-key STRING (r08: that join shuffled the string column
-    # a second time and replayed the keyed projection; guide §2.3).
-    # Checkpoint: rk is the junction of TWO diamonds (the bucket frame
-    # self-joins, and cand feeds both the verify and the final join), so
-    # un-pinned it replayed the rank window + parse 4x. |docs| rows of
-    # two BIGINTs — one tiny materialization, tracked for registry-side
-    # release (ADVICE r08).
-    rk = tracked_checkpoint(
-        ranked.select(
-            F.substring(F.col("value"), -20, 20).cast("long").alias("doc_id"),
-            "rn",
-        )
-    )
-    b = rk.select(
-        "doc_id",
-        "rn",
-        F.explode(
-            F.array(
-                F.floor(F.col("rn") / SNM_WINDOW),
-                F.floor(F.col("rn") / SNM_WINDOW) + 1,
-            )
-        ).alias("bucket"),
-    )
-    cand = (
-        b.alias("a")
-        .join(b.alias("b"), "bucket")
-        .filter(
-            (F.col("b.rn") - F.col("a.rn") >= 1)
-            & (F.col("b.rn") - F.col("a.rn") <= SNM_WINDOW)
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            (F.col("b.rn") - F.col("a.rn")).cast("long").alias("rank_dist"),
-        )
-        .distinct()
-    )
-    # cand feeds the Jaccard verify AND the final rank_dist join —
-    # checkpoint the O(n·w)-row candidate set once (see rk above)
-    cand = tracked_checkpoint(cand)
+    cand = snm_candidates(d)
     verified = exact_jaccard_on_pairs(d, cand.select("doc_a", "doc_b"))
     return (
         cand.join(verified, ["doc_a", "doc_b"])
@@ -1904,58 +1910,22 @@ def blocking_quality_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs inside the candidate set) and REDUCTION RATIO (fraction of
     the n(n-1)/2 comparisons avoided). Here it certifies
     dedup_sorted_neighborhood's blocking QUANTITATIVELY: candidates =
-    pairs within {SNM_WINDOW} sort ranks of the SNM key (rebuilt with
-    the same rank-bucket equi-join, no non-equi join at scale); truth
-    = the exact 3-gram Jaccard >= 0.2 pair set (dedup_ngram_jaccard's
-    definition). All four counts are exact BIGINTs; PC and RR are
-    single divisions, rounded 6. The test pins PC = 1.0 on this
+    the same `snm_candidates` pairs within {SNM_WINDOW} sort ranks of
+    the SNM key (rank-bucket equi-join, no non-equi join at scale), as
+    unordered (least, greatest) doc pairs; truth = the exact 3-gram
+    Jaccard >= 0.2 pair set (dedup_ngram_jaccard's definition). All
+    four counts are exact BIGINTs; PC and RR are single divisions,
+    rounded 6. The test pins PC = 1.0 on this
     fixture (the SNM recall claim, now a measured number) and RR near
     1. At 100 TB the candidate join is the SNM rank-bucket equi-join
     and truth-set evaluation runs on a SAMPLE in practice — the
     operator's shape is the audit harness either way."""
-    from ..models.common import encode_sorted_rank
-
     d = load_table(spark, sf_dir, "documents")
     truth = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    keyed = d.select(
-        "doc_id",
-        F.concat_ws(
-            "|",
-            F.lower(F.substring(F.trim(F.col("text")), 1, SNM_KEY_LEN)),
-            # 20-char pad covers any BIGINT (ADVICE r08: lpad TRUNCATES
-            # past the width, so an 8-char pad silently corrupted doc_ids
-            # at >= 10^8 docs; same-length pads keep the order identical)
-            F.lpad(F.col("doc_id").cast("string"), 20, "0"),
-        ).alias("sortval"),
-    )
-    ranked = encode_sorted_rank(
-        keyed.select(F.col("sortval").alias("value")), "value", "rn"
-    )
-    rk = keyed.join(ranked, keyed.sortval == ranked.value).select(
-        "doc_id", "rn"
-    )
-    b = rk.select(
-        "doc_id",
-        "rn",
-        F.explode(
-            F.array(
-                F.floor(F.col("rn") / SNM_WINDOW),
-                F.floor(F.col("rn") / SNM_WINDOW) + 1,
-            )
-        ).alias("bucket"),
-    )
-    cand = (
-        b.alias("a")
-        .join(b.alias("b"), "bucket")
-        .filter(
-            (F.col("b.rn") - F.col("a.rn") >= 1)
-            & (F.col("b.rn") - F.col("a.rn") <= SNM_WINDOW)
-        )
-        .select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-        )
-        .distinct()
+    # each unordered pair sits at exactly one rank pair: no distinct needed
+    cand = snm_candidates(d).select(
+        F.least("doc_a", "doc_b").alias("doc_a"),
+        F.greatest("doc_a", "doc_b").alias("doc_b"),
     )
     n_true = truth.agg(F.count("*").cast("long").alias("n_true"))
     n_cand = cand.agg(F.count("*").cast("long").alias("n_cand"))

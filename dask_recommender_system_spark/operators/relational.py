@@ -8,17 +8,19 @@ Spark implementation. Determinism conventions are in ``registry.py``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..data import RATINGS_SQL, load_table, ratings_cached
+from ..data import RATINGS_SQL, _cache_root, load_table, ratings_cached
 from ..models.common import encode_sorted_rank
 from ..registry import query
 
-IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
+# Scratch root of every query that writes files and reads them back (sinks,
+# format round-trips, streaming sources and checkpoints): under the
+# process-scoped cache root, so concurrent processes never share a path and
+# nothing outlives the process.
+IO_DIR = f"{_cache_root()}/io"
 
 # Epoch-seconds projection of a timestamp, identical on both engines.
 # Spark: unix_timestamp(ts) (bigint, truncates sub-seconds; every query runs
@@ -1039,6 +1041,24 @@ PREDICT_SQL = f"""
 """
 
 
+def bias_tables(train: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The shared bias baseline over a (user_id, item_id, rating) train
+    frame: one-row ``mu`` (global mean), ``ub`` (user_id, bu) and ``ib``
+    (item_id, bi), every value rounded to 6 places before it is used, as
+    the oracles' ``mu``/``ub``/``ib`` CTEs round it. Each bias subtracts
+    the rounded mean through a broadcast one-row cross join."""
+    mu = train.agg(F.round(F.avg("rating"), 6).alias("mu"))
+
+    def bias(key: str, name: str) -> DataFrame:
+        return (
+            train.crossJoin(F.broadcast(mu))
+            .groupBy(key)
+            .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias(name))
+        )
+
+    return mu, bias("user_id", "bu"), bias("item_id", "bi")
+
+
 @query("join_predict_lookup", oracle=PREDICT_SQL)
 def join_predict_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2: predict-time parameter lookup with cold-start fallback (reference
@@ -1050,23 +1070,14 @@ def join_predict_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (data.ratings_cached): this plan consumes the view three times
     (train/test/biases), so re-deriving the md5 interaction_id per
     consumption tripled its bench time after the round-6 determinism fix
-    — materialize-once is the at-scale shape."""
+    — materialize-once is the at-scale shape. μ, bu and bi come from
+    `bias_tables`, the baseline recommend_top_k and mmr_rerank share."""
     from ..data import ratings_cached
 
     r = ratings_cached(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7)
     test = r.filter(F.col("interaction_id") % 10 >= 7)
-    mu = train.agg(F.round(F.avg("rating"), 6).alias("mu"))
-    ub = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("user_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bu"))
-    )
-    ib = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("item_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bi"))
-    )
+    mu, ub, ib = bias_tables(train)
     raw = (
         F.col("mu")
         + F.coalesce(F.col("bu"), F.lit(0.0))

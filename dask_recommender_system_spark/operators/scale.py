@@ -12,8 +12,6 @@ the same engineering concern: bound the per-task working set.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -21,8 +19,6 @@ from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
 
 N_SALTS = 8
-
-IO_DIR = os.environ.get("SPARK_GRAFT_IO_DIR", "/tmp/drs_spark_io")
 
 
 @query(
@@ -134,6 +130,8 @@ def join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     write time, never again at read time. The result is oracle-identical
     to the plain join."""
     import hashlib
+
+    from .relational import IO_DIR
 
     n_buckets = 8
     sf_tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]

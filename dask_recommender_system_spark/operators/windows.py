@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from ..data import RATINGS_SQL, load_table, ratings_cached
 from ..registry import query
-from .relational import ORACLE_EPOCH
+from .relational import ORACLE_EPOCH, bias_tables
 
 EPOCH_TS = ORACLE_EPOCH.format(col="ts")
 
@@ -471,9 +471,10 @@ def recommend_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X5: per-user top-k recommendations (report.pdf §2's "top N items";
     MLlib's ``recommendForAllUsers`` is the model-based fast path — see
     models/queries.py). Declared oracle form: score every (user, item) pair
-    for a deterministic user sample with the bias model, window-rank ≤ k.
-    At 100 TB the cross join is the cost — the real path prunes with LSH
-    (see operators/similarity.py) or MLlib's blocked BLAS ranking.
+    for a deterministic user sample with the bias model (`bias_tables`),
+    window-rank ≤ k. At 100 TB the cross join is the cost — the real path
+    prunes with LSH (see operators/similarity.py) or MLlib's blocked BLAS
+    ranking.
     Reads the derive-once materialized ratings view (data.ratings_cached)
     — recs_novelty consumes this query AND the view again, so
     materialize-once removes the repeated md5 interaction_id derivation
@@ -482,17 +483,7 @@ def recommend_top_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     r = ratings_cached(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7).persist()
-    mu = train.agg(F.round(F.avg("rating"), 6).alias("mu"))
-    ub = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("user_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bu"))
-    )
-    ib = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("item_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bi"))
-    )
+    mu, ub, ib = bias_tables(train)
     users = ub.filter(F.col("user_id") % 29 == 0)
     # Candidate pruning (exact): score = μ + bu + bi is additive, so every
     # user's top-k under (score DESC, item_id) is contained in the global
@@ -1940,9 +1931,9 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     enough that the penalty genuinely binds) is already represented (binary max-similarity, penalty {MMR_PENALTY}). The
     measurement twins are recs_novelty / recommendation_coverage —
     this is the OPERATOR that moves those metrics. Determinism: model
-    scores are the shared 6dp-rounded bias model, the penalty is
-    dyadic (exact float subtract), and every argmax carries the
-    item_id tiebreak, so the greedy trajectory cannot fork
+    scores are the shared 6dp-rounded bias model (`bias_tables`), the
+    penalty is dyadic (exact float subtract), and every argmax carries
+    the item_id tiebreak, so the greedy trajectory cannot fork
     cross-engine; the oracle unrolls the {MMR_PICKS} picks as CTE
     pairs. Plan: the candidate pool is the SAME exact containment
     prune as recommend_top_k (global top-{MMR_POOL} by item bias,
@@ -1951,17 +1942,7 @@ def mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded work per user independent of catalog size."""
     r = ratings_cached(spark, sf_dir)
     train = r.filter(F.col("interaction_id") % 10 < 7).persist()
-    mu = train.agg(F.round(F.avg("rating"), 6).alias("mu"))
-    ub = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("user_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bu"))
-    )
-    ib = (
-        train.crossJoin(F.broadcast(mu))
-        .groupBy("item_id")
-        .agg(F.round(F.avg("rating") - F.first("mu"), 6).alias("bi"))
-    )
+    mu, ub, ib = bias_tables(train)
     pool = ib.orderBy(F.col("bi").desc(), F.col("item_id")).limit(MMR_POOL)
     part = load_table(spark, sf_dir, "part").select(
         F.col("p_partkey"), F.col("p_type").alias("sim_attr")

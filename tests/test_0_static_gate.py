@@ -1,7 +1,7 @@
 """Static gate: catches name and import breakage before any Spark test runs.
 
 Stdlib only, no SparkSession; the file name sorts first under
-``pytest tests/``. Seven checks over every module of the package and every
+``pytest tests/``. Eight checks over every module of the package and every
 harness script (``bench.py``, ``correctness_local.py``,
 ``__spark_entry__.py``, ``tools/*.py``, loaded by path, since no test
 imports them):
@@ -20,7 +20,10 @@ imports them):
 6. ``.localCheckpoint(`` is called only in ``models.common``, and no
    ``release_checkpoint(`` sits in a loop body under ``operators``;
 7. the session time zone is set only in ``session`` and ``registry``, and
-   no session-wide Arrow UDTF flag is set.
+   no session-wide Arrow UDTF flag is set;
+8. in ``operators.dedup`` the shingle-overlap size columns and the
+   sorted-neighborhood rank buckets are built only inside
+   ``shingle_overlap`` and ``snm_candidates``.
 
 pyflakes and ruff would cover 2 and 3, but neither is a dependency here.
 """
@@ -379,3 +382,38 @@ def test_session_time_zone_set_only_at_query_entry():
             if utc:
                 bad.append(f"{name}:{node.lineno} _utc")
     assert not bad, "time-zone or UDTF session settings outside their home:\n" + "\n".join(bad)
+
+
+def test_pair_overlap_and_snm_buckets_only_in_their_helpers():
+    """The exact-verify stage (|A∩B| plus each side's shingle count) has
+    one home, ``operators.dedup.shingle_overlap``, and the sorted-
+    neighborhood rank-bucket explode one, ``snm_candidates``. Elsewhere in
+    ``operators.dedup``, an ``alias("na")``/``alias("nb")`` size column
+    or a ``floor(... / SNM_WINDOW)`` bucket is a hand copy of one of
+    them. Counts calls in code only; the oracle strings and docstrings
+    do not match."""
+    homes = {"shingle_overlap", "snm_candidates"}
+    tree = MODULES[f"{PKG.__name__}.operators.dedup"][2]
+    allowed = {
+        id(n)
+        for fn in ast.walk(tree)
+        if isinstance(fn, ast.FunctionDef) and fn.name in homes
+        for n in ast.walk(fn)
+    }
+    bad = []
+    for node in ast.walk(tree):
+        if not isinstance(node, ast.Call) or id(node) in allowed:
+            continue
+        callee = _callee(node)
+        if (
+            callee == "alias"
+            and node.args
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value in ("na", "nb")
+        ):
+            bad.append(f"dedup:{node.lineno} alias({node.args[0].value!r})")
+        if callee == "floor" and any(
+            isinstance(n, ast.Name) and n.id == "SNM_WINDOW" for n in ast.walk(node)
+        ):
+            bad.append(f"dedup:{node.lineno} floor(... / SNM_WINDOW)")
+    assert not bad, "hand-built pair overlap or SNM buckets:\n" + "\n".join(bad)

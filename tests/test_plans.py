@@ -1003,9 +1003,11 @@ def test_zstd_codec_actually_applies(spark, sf_dir):
 
     import pyarrow.parquet as pq
 
+    from dask_recommender_system_spark.operators.relational import IO_DIR
+
     q("sink_parquet_zstd", spark, sf_dir).collect()
     for codec, expect in (("snappy", "SNAPPY"), ("zstd", "ZSTD")):
-        f = glob.glob(f"/tmp/drs_spark_io/nation_{codec}/part-*.parquet")[0]
+        f = glob.glob(f"{IO_DIR}/nation_{codec}/part-*.parquet")[0]
         meta = pq.ParquetFile(f).metadata.row_group(0).column(0)
         assert meta.compression == expect, (codec, meta.compression)
 
@@ -1019,11 +1021,12 @@ def test_sized_sink_respects_record_cap(spark, sf_dir):
     import pyarrow.parquet as pq
 
     from dask_recommender_system_spark.operators.relational import (
+        IO_DIR,
         SIZED_MAX_RECORDS,
     )
 
     q("sink_parquet_sized", spark, sf_dir).collect()
-    files = glob.glob("/tmp/drs_spark_io/orders_sized_parquet/part-*.parquet")
+    files = glob.glob(f"{IO_DIR}/orders_sized_parquet/part-*.parquet")
     assert len(files) > 2  # the cap split the 2 tasks' outputs
     for f in files:
         assert pq.ParquetFile(f).metadata.num_rows <= SIZED_MAX_RECORDS

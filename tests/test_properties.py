@@ -910,3 +910,109 @@ def test_simhash_verified_prefilter_sits_at_banding_guarantee(spark):
     rows = cand.withColumn("h", ham).collect()
     assert len(rows) == 1 and rows[0]["h"] == 29
     assert rows[0]["h"] <= SIMHASH_GUARANTEE  # prefilter keeps it
+
+
+def _set_overlap(shingle_sets, pairs):
+    """{(a, b): (c, na, nb)} by Python set arithmetic, zero overlaps dropped."""
+    out = {}
+    for a, b in pairs:
+        sa, sb = shingle_sets.get(a, set()), shingle_sets.get(b, set())
+        if sa & sb:
+            out[(a, b)] = (len(sa & sb), len(sa), len(sb))
+    return out
+
+
+def test_shingle_overlap_matches_set_arithmetic(spark):
+    """operators.dedup.shingle_overlap on a planted corpus: doc 2 repeats
+    its shingles (each counts once), doc 3 has fewer than 3 tokens (no
+    shingles, so no pair), doc 5 shares nothing, doc 4 is the larger side
+    of its pairs. The self-join form and
+    the candidate probe both give Python's |A∩B|, |A|, |B|; candidates
+    with zero overlap or a shingle-less side drop out."""
+    from dask_recommender_system_spark.models.common import (
+        release_query_checkpoints,
+    )
+    from dask_recommender_system_spark.operators.dedup import (
+        SHINGLE_N,
+        shingle_overlap,
+        shingles,
+    )
+
+    texts = {
+        1: "a b c d e",
+        2: "a b c a b c a b c",
+        3: "  x  y ",
+        4: "b c  d e f g",
+        5: "p q r s",
+        6: "c a b c d",
+    }
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    sets = {}
+    for d, t in texts.items():
+        tok = t.split()
+        grams = {" ".join(tok[i : i + SHINGLE_N]) for i in range(len(tok) - SHINGLE_N + 1)}
+        if grams:
+            sets[d] = grams
+
+    def got(cand=None):
+        rows = shingle_overlap(shingles(docs), cand).collect()
+        out = {(r["doc_a"], r["doc_b"]): (r["c"], r["na"], r["nb"]) for r in rows}
+        assert len(out) == len(rows)
+        return out
+
+    all_pairs = [(a, b) for a in texts for b in texts if a < b]
+    want = _set_overlap(sets, all_pairs)
+    assert want[(1, 2)] == (1, 3, 3) and (1, 5) not in want
+    assert got() == want
+
+    cand = [(1, 4), (1, 5), (2, 6), (1, 3), (4, 6)]
+    want = _set_overlap(sets, cand)
+    assert want == {(1, 4): (2, 3, 4), (2, 6): (2, 3, 3), (4, 6): (1, 4, 3)}
+    assert got(spark.createDataFrame(cand, "doc_a long, doc_b long")) == want
+    release_query_checkpoints()
+
+
+def test_snm_candidates_are_the_pairs_within_the_window(spark):
+    """operators.dedup.snm_candidates equals a Python sort on
+    (lowercased, trimmed SNM_KEY_LEN-char prefix, zero-padded doc_id)
+    followed by every pair within SNM_WINDOW ranks: each pair once,
+    doc_a the lower rank, rank_dist the rank gap. Prefixes tie in groups
+    (case and leading blanks differ), so the doc_id tiebreak orders
+    most of the corpus, and doc_ids of different digit counts check that
+    the tiebreak is numeric. Every text is longer than SNM_KEY_LEN, so
+    this tuple order equals the helper's prefix|padded-id string order."""
+    from dask_recommender_system_spark.models.common import (
+        release_query_checkpoints,
+    )
+    from dask_recommender_system_spark.operators.dedup import (
+        SNM_KEY_LEN,
+        SNM_WINDOW,
+        snm_candidates,
+    )
+
+    stems = [
+        "The quick brown fox jumps over the lazy dog",
+        "  the QUICK brown fox jumps over a lazy cat",
+        "Lorem ipsum dolor sit amet, consectetur",
+        "zebra crossings are striped black and white",
+    ]
+    ids = [7, 12, 100, 3, 45, 1000, 9, 23, 512, 64, 2, 88, 31, 150, 6, 77]
+    texts = {d: f"{stems[i % len(stems)]} {d}" for i, d in enumerate(ids)}
+    docs = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+
+    def key(d):
+        return (texts[d].strip(" ")[:SNM_KEY_LEN].lower(), str(d).zfill(20))
+
+    order = sorted(texts, key=key)
+    assert len({key(d)[0] for d in texts}) == 3  # prefix ties
+    assert all(len(t.strip(" ")) > SNM_KEY_LEN for t in texts.values())
+    want = {
+        (order[i], order[j], j - i)
+        for i in range(len(order))
+        for j in range(i + 1, min(i + SNM_WINDOW, len(order) - 1) + 1)
+    }
+    rows = [(r["doc_a"], r["doc_b"], r["rank_dist"]) for r in snm_candidates(docs).collect()]
+    assert len(rows) == len(set(rows))
+    assert set(rows) == want
+    assert {r[2] for r in rows} == set(range(1, SNM_WINDOW + 1))
+    release_query_checkpoints()
